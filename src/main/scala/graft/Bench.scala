@@ -102,7 +102,8 @@ object Bench {
     // average cannot exonerate or indict an individual query's timing —
     // a mid-run spike would go unrecorded. One OS-bean read per query is
     // free; min/mean/max ride the detail artifact so the ratio gate can
-    // report the load BAND the run actually saw.
+    // report the band of 1-minute-average samples the run took (a spike
+    // shorter than a minute between two samples can still be missed).
     val loadSamples = scala.collection.mutable.ArrayBuffer.empty[Double]
     def sampleLoad(): Unit = {
       val l = java.lang.management.ManagementFactory
@@ -212,9 +213,9 @@ object Bench {
       val loadNow = java.lang.management.ManagementFactory
         .getOperatingSystemMXBean.getSystemLoadAverage
       val loadJson = if (loadNow < 0) "null" else ms(loadNow)
-      // per-query load band (r21 ADVICE #4): min/mean/max across one sample
-      // taken before each benched query — "load" keeps its end-of-run
-      // semantics for artifact continuity
+      // per-query load band (r21 ADVICE #4): min/mean/max of the
+      // 1-minute-average samples, one taken before each benched query —
+      // "load" keeps its end-of-run semantics for artifact continuity
       val band =
         if (loadSamples.isEmpty) ""
         else s""","load_min":${ms(loadSamples.min)},"load_mean":${

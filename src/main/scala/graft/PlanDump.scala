@@ -10,6 +10,8 @@ import org.apache.spark.sql.execution.FormattedMode
   * Writes <outDir>/<query>_<suffix>.txt per query. Builders that eagerly
   * materialize scratch tiers during setup run that setup; only the RETURNED
   * DataFrame's plan is dumped (the read path — the regression signal).
+  * With `-Dspark.sql.planChangeLog.level=warn` in the JVM options the
+  * session also logs every optimizer rule's plan change while building.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

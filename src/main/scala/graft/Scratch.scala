@@ -562,35 +562,6 @@ object Scratch {
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
         spark.sparkContext.removeSparkListener(listener)
       }
-    } else if (args.headOption.contains("phash_fill_ab")) {
-      // r22: does eagerly materializing the (doc_id, dhash) cache before
-      // dHashDedupApply's three consumers beat the racing lazy fill? The
-      // apply chain's anchor/b-side/anti-join stages are submitted
-      // concurrently and all hit the unfilled cache — per-block locks
-      // serialize the decode, but the waiting tasks hold cores and the
-      // stage walls stack.
-      import org.apache.spark.sql.DataFrame
-      import graft.llm.Multimodal
-      def noop(dfb: DataFrame): Unit =
-        dfb.write.mode("overwrite").format("noop").save()
-      val fix = graft.queries.LlmQueries.mediaPhashFix(spark, d)
-      for (_ <- 1 to 3) {
-        time("apply as-is (racing lazy fill)")(noop(
-          Multimodal.dHashDedupApply(Multimodal.dHashMedia(fix), maxDist = 3)
-            .select(col("doc_id"), col("dhash")).orderBy(col("doc_id"))))
-        CacheHygiene.releaseAll(spark)
-        val hashed = Multimodal.dHashMedia(fix).persist()
-        val t0 = System.nanoTime()
-        hashed.count()
-        val fill = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        noop(Multimodal.dHashDedupApply(hashed, maxDist = 3)
-          .select(col("doc_id"), col("dhash")).orderBy(col("doc_id")))
-        println(f"[scratch] apply prefilled: fill=$fill%.2f s " +
-          f"chain=${(System.nanoTime() - t1) / 1e9}%.2f s " +
-          f"total=${fill + (System.nanoTime() - t1) / 1e9}%.2f s")
-        CacheHygiene.releaseAll(spark)
-      }
     } else if (args.headOption.contains("phash_ab")) {
       // q_mm_phash cost decomposition: fixture encode vs decode+hash
       import org.apache.spark.sql.DataFrame

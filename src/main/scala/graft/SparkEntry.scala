@@ -1,61 +1,26 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+import graft.queries._
+/** Driver contract (SURVEY.md §7). Every view below is derived from the one
+  * registry of [[graft.queries.Op]] records the query families declare. */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The composite promread read path — matchers, time range, routing,
     * sample values, labels, ordering — is the engine's signature operation. */
   def entry(spark: SparkSession): DataFrame =
     queries("q_read_path")(spark, "/root/testdata/sf0.001")
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** Every implemented operator from SURVEY.md §2, each declared once. */
+  lazy val ops: Seq[Op] =
+    CoreQueries.ops ++ MetricsQueries.ops ++ LlmQueries.ops ++ HistoQueries.ops ++
+      SinkQueries.ops ++ IngestQueries.ops ++ CurationQueries.ops
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.CoreQueries.queries ++ graft.queries.MetricsQueries.queries ++
-      graft.queries.LlmQueries.queries ++ graft.queries.HistoQueries.queries ++
-      graft.queries.SinkQueries.queries ++ graft.queries.IngestQueries.queries ++
-      graft.queries.CurationQueries.queries
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    graft.queries.CoreQueries.oracles ++ graft.queries.MetricsQueries.oracles ++
-      graft.queries.LlmQueries.oracles ++ graft.queries.HistoQueries.oracles ++
-      graft.queries.SinkQueries.oracles ++ graft.queries.IngestQueries.oracles ++
-      graft.queries.CurationQueries.oracles
-  /** Correctness-only twins: Verify runs them (they carry the full-oracle
-    * proof for operators whose production form DuckDB cannot restate), but
-    * Bench skips them — their cost is the portability price of the oracle
-    * (md5-based signatures both engines can compute, brute-force all-pairs
-    * scans), not a production code path, and at ~20% of the r7 bench total
-    * they distorted the performance signal the bench exists to give. */
-  def verifyOnly: Set[String] = Set(
-    "q_dedup_minhash_det", "q_dedup_simhash_det", "q_ann_lsh_all", "q_ann_ivf_all",
-    "q_ann_ivf_kmeans_det",
-    // full-oracle det twins of the production LSH cluster/apply chain
-    // (q_dedup_clusters_lsh / q_dedup_apply_lsh) — md5 signature math is the
-    // portability price of the oracle, not a production path
-    "q_dedup_clusters_lsh_det", "q_dedup_apply_lsh_det",
-    // the exact-Jaccard chain (r15 verdict #1): correct and oracle-gated,
-    // but its uncapped shingle inverted-index self-join is quadratic on a
-    // hot shingle (21-27x at 10x data) — it is the VERIFY twin of the
-    // banded LSH chain above, which is what a 100 TB corpus actually runs
-    "q_dedup_jaccard", "q_dedup_clusters", "q_dedup_apply",
-    // the paper's uncapped all-pairs SemDeDup (r17 verdict #3): within-cell
-    // quadratic on a dense near-parallel clump (the measured 10x waiver) —
-    // the anchorCap=64 production rows are what the bench measures now;
-    // these stay as the full-oracle semantics pins (EmbedSpec: capped ⊇
-    // uncapped, equal when every cell fits under the cap)
-    "q_dedup_semdedup_full", "q_dedup_semdedup_text_full",
-    // the image near-dup PAIR list (r18 close): quadratic output on a
-    // clustered corpus by definition (m re-encodes = m(m-1)/2 pairs, 9.4x
-    // at 10x) — it stays as the full-oracle banding instrument while the
-    // benched production form is q_mm_dedup_phash_apply (linear survivor
-    // set, anchor-capped work)
-    "q_mm_dedup_phash",
-    // exact-percentile twins of q_quality_cut / q_quality_cut_by_lang /
-    // q_lm_cut_by_lang: the all-values-in-one-buffer aggregate is the
-    // oracle instrument, never the benched production path
-    "q_quality_cut_det", "q_quality_cut_by_lang_det", "q_lm_cut_by_lang_det",
-    // storage-mode twin of q_p8_route_mv_hist (maintenance.merge_tier_buckets):
-    // same dashboard, same oracle — benching it would double-count the
-    // routed-hist setup without adding a distinct production path
-    "q_p8_route_mv_hist_merged")
+    ops.map(o => o.name -> o.build).toMap
+  /** Equivalent ANSI SQL runnable by DuckDB on the same parquet tables, for
+    * every operator that carries one (rows-only operators do not). */
+  def oracleSql: Map[String, String] = ops.collect {
+    case Op(n, _, Oracle(sql)) => n -> sql
+    case Op(n, _, VerifyOnly(sql)) => n -> sql
+  }.toMap
+  /** Correctness-only twins: Verify runs them, Bench skips them. */
+  def verifyOnly: Set[String] = ops.collect { case Op(n, _, _: VerifyOnly) => n }.toSet
 }

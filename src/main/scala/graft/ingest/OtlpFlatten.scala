@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions._
   * resource→scope→metric→datapoint flatten; :126-285 per-type conversion;
   * :332-344 attribute merge).
   *
-  * The gRPC transport itself is out of scope (SURVEY §2.1 S1) — the engine's
-  * ingest surface is "a DataFrame shaped like an OTLP export": one row per
-  * resource, with `resource` attrs and an array of datapoint structs. At
+  * The transports ([[graft.transport.GrpcOtlpReceiver]], the `/ingest`
+  * endpoint) land batches as files; from there the engine's ingest surface
+  * is "a DataFrame shaped like an OTLP export": one row per resource, with
+  * `resource` attrs and an array of datapoint structs. At
   * 100 TB this arrives as a parquet/stream source already sharded by resource;
   * the flatten below is generator (explode) work — narrow, no shuffle,
   * whole-stage codegen.

@@ -578,7 +578,11 @@ object Dedup {
     * (`component`); `converged` says whether the loop reached a fixpoint
     * before `maxIter`. Non-converged labels are still well-defined — an
     * over-segmentation of the true components (dedup keeps too much, never
-    * drops a non-duplicate) — so callers can proceed best-effort or fail. */
+    * drops a non-duplicate) — so callers can proceed best-effort or fail.
+    * `rounds` counts propagation rounds after the seeded init, which is
+    * itself the first round: it reads one lower than before that init
+    * (r22) for the same graph (a graph the seed already converges reports
+    * 1), so do not compare it like-for-like with earlier logs. */
   final case class ComponentsResult(labels: DataFrame, converged: Boolean,
     rounds: Int)
 

@@ -662,7 +662,14 @@ object Multimodal {
     * ever sorts a whole hot bucket — the topKPerGroup doctrine), and the
     * loser join salts the b-side (anchors, ≤cap per bucket, replicate to
     * every salt; result set unchanged) so the hottest bucket spreads over
-    * nSalts tasks. */
+    * nSalts tasks.
+    *
+    * EAGER: unlike most builders in this library this is not pure plan
+    * construction — it persists `hashed` and fills that cache with one
+    * `count()` job at call time (the decode runs then, not when the result
+    * executes), like [[Dedup.components]]. Call it where running jobs is
+    * acceptable; plan-inspection callers (PlanDump, plan-shape specs) pay
+    * the decode too. */
   def dHashDedupApply(hashed: DataFrame, maxDist: Int,
       anchorCap: Int = 64, nSalts: Int = 32): DataFrame = {
     // PERSISTED (r19, the dHashPairs contract): `hashed` is usually a lazy

@@ -17,9 +17,9 @@ object CoreQueries {
   private def cents(c: org.apache.spark.sql.Column) =
     round(c * 100, 0).cast("long")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def ops: Seq[Op] = Seq(
     // A16/F5 — verification aggregates (reference scripts/run_tests.sh:170-201)
-    "q_a16_verify_aggs" -> ((s, d) => {
+    Op("q_a16_verify_aggs", (s, d) => {
       Tables.lineitem(s, d).agg(
         count(lit(1)).as("row_cnt"),
         count_distinct(col("l_partkey")).as("part_cnt"),
@@ -27,36 +27,55 @@ object CoreQueries {
         sum(cents(col("l_extendedprice"))).as("price_cents"),
         date_format(min(col("l_shipdate")), "yyyy-MM-dd").as("min_ship"),
         date_format(max(col("l_shipdate")), "yyyy-MM-dd").as("max_ship"))
-    }),
+    }, Oracle(
+      """SELECT count(*) AS row_cnt,
+        |       count(DISTINCT l_partkey) AS part_cnt,
+        |       CAST(sum(l_quantity) AS BIGINT) AS qty_sum,
+        |       CAST(sum(CAST(round(l_extendedprice*100,0) AS BIGINT)) AS BIGINT) AS price_cents,
+        |       strftime(min(l_shipdate), '%Y-%m-%d') AS min_ship,
+        |       strftime(max(l_shipdate), '%Y-%m-%d') AS max_ship
+        |FROM lineitem""".stripMargin)),
 
     // O1/O2 — ORDER BY + LIMIT with deterministic tiebreak (handler.go:297-298)
-    "q_o1_sort_limit" -> ((s, d) => {
+    Op("q_o1_sort_limit", (s, d) => {
       Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
         .orderBy(col("l_extendedprice").desc, col("l_orderkey"), col("l_linenumber"))
         .limit(100)
-    }),
+    }, Oracle(
+      """SELECT l_orderkey, l_linenumber, l_extendedprice
+        |FROM lineitem
+        |ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber
+        |LIMIT 100""".stripMargin)),
 
     // O5 — ORDER BY count DESC (Makefile:103 top-metrics monitoring query)
-    "q_o5_group_topk" -> ((s, d) => {
+    Op("q_o5_group_topk", (s, d) => {
       Tables.events(s, d).groupBy(col("event_type"))
         .agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("event_type"))
-    }),
+    }, Oracle(
+      """SELECT event_type, count(*) AS cnt
+        |FROM events GROUP BY event_type
+        |ORDER BY cnt DESC, event_type""".stripMargin)),
 
     // U1 — UNION ALL (run_tests.sh:178-186)
-    "q_u1_union_all" -> ((s, d) => {
+    Op("q_u1_union_all", (s, d) => {
       val o = Tables.orders(s, d)
       o.filter(col("o_orderstatus") === "F")
         .select(lit("F").as("src"), col("o_orderkey"))
         .unionAll(o.filter(col("o_orderstatus") === "O")
           .select(lit("O").as("src"), col("o_orderkey")))
         .orderBy(col("src"), col("o_orderkey"))
-    }),
+    }, Oracle(
+      """SELECT * FROM (
+        |  SELECT 'F' AS src, o_orderkey FROM orders WHERE o_orderstatus = 'F'
+        |  UNION ALL
+        |  SELECT 'O' AS src, o_orderkey FROM orders WHERE o_orderstatus = 'O')
+        |ORDER BY src, o_orderkey""".stripMargin)),
 
     // Joins come free from the DataFrame API (SURVEY §2.3); the dimension side
     // is broadcast so the fact scan never shuffles for the join itself.
-    "q_join_agg" -> ((s, d) => {
+    Op("q_join_agg", (s, d) => {
       val c = Tables.customer(s, d); val n = Tables.nation(s, d)
       val o = Tables.orders(s, d)
       o.join(c.hint("broadcast"), col("o_custkey") === col("c_custkey"))
@@ -65,7 +84,13 @@ object CoreQueries {
         .agg(count(lit(1)).as("order_cnt"),
           sum(cents(col("o_totalprice"))).as("total_cents"))
         .orderBy(col("n_name"))
-    }),
+    }, Oracle(
+      """SELECT n_name, count(*) AS order_cnt,
+        |       CAST(sum(CAST(round(o_totalprice*100,0) AS BIGINT)) AS BIGINT) AS total_cents
+        |FROM orders
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |GROUP BY n_name ORDER BY n_name""".stripMargin)),
 
     // F1/F10/F16-ish scalar battery: scalar extraction from the JSON-ish props
     // string, string funcs, ms-epoch conversion (F14). Extraction is substring
@@ -77,7 +102,7 @@ object CoreQueries {
     // projection above the sort, so the string battery runs once (the
     // explicit RangeSort helper is for shapes the rule can't see — a filter
     // or window between projection and sort)
-    "q_f_scalars" -> ((s, d) => {
+    Op("q_f_scalars", (s, d) => {
       EventsMetrics.fromEvents(s, d).select(
         col("event_id"),
         col("props").substr(lit(7), length(col("props")) - 7)
@@ -87,66 +112,26 @@ object CoreQueries {
         ascii(col("event_type")).cast("long").as("etype_ascii"),
         col("ts_ms"))
         .orderBy(col("event_id"))
-    }),
-
-    // F3/F4 — time bucketing as ms-epoch floors (engine-portable twin of
-    // toStartOfFiveMinute, schema.sql:255)
-    "q_f3_time_buckets" -> ((s, d) => {
-      EventsMetrics.fromEvents(s, d)
-        .groupBy((col("ts_ms") - pmod(col("ts_ms"), lit(300000L))).as("bucket5_ms"))
-        .agg(count(lit(1)).as("cnt"),
-          sum(cents(col("value"))).as("value_cents"))
-        .orderBy(col("bucket5_ms"))
-    }))
-
-  def oracles: Map[String, String] = Map(
-    "q_a16_verify_aggs" ->
-      """SELECT count(*) AS row_cnt,
-        |       count(DISTINCT l_partkey) AS part_cnt,
-        |       CAST(sum(l_quantity) AS BIGINT) AS qty_sum,
-        |       CAST(sum(CAST(round(l_extendedprice*100,0) AS BIGINT)) AS BIGINT) AS price_cents,
-        |       strftime(min(l_shipdate), '%Y-%m-%d') AS min_ship,
-        |       strftime(max(l_shipdate), '%Y-%m-%d') AS max_ship
-        |FROM lineitem""".stripMargin,
-
-    "q_o1_sort_limit" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice
-        |FROM lineitem
-        |ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber
-        |LIMIT 100""".stripMargin,
-
-    "q_o5_group_topk" ->
-      """SELECT event_type, count(*) AS cnt
-        |FROM events GROUP BY event_type
-        |ORDER BY cnt DESC, event_type""".stripMargin,
-
-    "q_u1_union_all" ->
-      """SELECT * FROM (
-        |  SELECT 'F' AS src, o_orderkey FROM orders WHERE o_orderstatus = 'F'
-        |  UNION ALL
-        |  SELECT 'O' AS src, o_orderkey FROM orders WHERE o_orderstatus = 'O')
-        |ORDER BY src, o_orderkey""".stripMargin,
-
-    "q_join_agg" ->
-      """SELECT n_name, count(*) AS order_cnt,
-        |       CAST(sum(CAST(round(o_totalprice*100,0) AS BIGINT)) AS BIGINT) AS total_cents
-        |FROM orders
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-
-    "q_f_scalars" ->
+    }, Oracle(
       """SELECT event_id,
         |       CAST(substring(props, 7, length(props) - 7) AS BIGINT) AS k_val,
         |       upper(event_type) AS etype_u,
         |       CAST(length(props) AS BIGINT) AS props_len,
         |       CAST(ascii(event_type) AS BIGINT) AS etype_ascii,
         |       epoch_ms(ts) AS ts_ms
-        |FROM events ORDER BY event_id""".stripMargin,
+        |FROM events ORDER BY event_id""".stripMargin)),
 
-    "q_f3_time_buckets" ->
+    // F3/F4 — time bucketing as ms-epoch floors (engine-portable twin of
+    // toStartOfFiveMinute, schema.sql:255)
+    Op("q_f3_time_buckets", (s, d) => {
+      EventsMetrics.fromEvents(s, d)
+        .groupBy((col("ts_ms") - pmod(col("ts_ms"), lit(300000L))).as("bucket5_ms"))
+        .agg(count(lit(1)).as("cnt"),
+          sum(cents(col("value"))).as("value_cents"))
+        .orderBy(col("bucket5_ms"))
+    }, Oracle(
       """SELECT (epoch_ms(ts) // 300000) * 300000 AS bucket5_ms,
         |       count(*) AS cnt,
         |       CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT) AS value_cents
-        |FROM events GROUP BY 1 ORDER BY bucket5_ms""".stripMargin)
+        |FROM events GROUP BY 1 ORDER BY bucket5_ms""".stripMargin)))
 }

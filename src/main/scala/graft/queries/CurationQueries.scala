@@ -73,18 +73,23 @@ object CurationQueries {
       .select(col("doc_id").as("vec_id"),
         graft.llm.Embed.hashedEmbedding(col("text")).as("embedding"))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def ops: Seq[Op] = Seq(
     // HTML boilerplate strip (the WET-extraction regex battery): script/
     // style/comment payloads dropped, tags stripped, entities decoded
     // (&amp; last), whitespace collapsed — per-doc cleaned text + sizes.
-    "q_html_clean" -> ((s, d) => {
+    Op("q_html_clean", (s, d) => {
       docsHtmlFix(s, d)
         .select(col("doc_id"),
           Html.toText(col("html")).as("clean_text"),
           length(col("html")).cast("long").as("n_raw"),
           length(Html.toText(col("html"))).cast("long").as("n_clean"))
         .orderBy(col("doc_id"))
-    }),
+    }, Oracle(
+      s"""WITH hfx AS ($HtmlFixSql)
+         |SELECT doc_id, ${htmlToTextSql("html")} AS clean_text,
+         |       CAST(len(html) AS BIGINT) AS n_raw,
+         |       CAST(len(${htmlToTextSql("html")}) AS BIGINT) AS n_clean
+         |FROM hfx ORDER BY doc_id""".stripMargin)),
 
     // Robots meta opt-out gate (r18): the publisher-opt-out pass a
     // responsible curation runs before keeping any text. Six fixture
@@ -96,7 +101,7 @@ object CurationQueries {
     // match across the tag close).
     // The oracle re-runs the SAME two RE2-subset patterns in DuckDB over
     // the reconstructed html (the redactPii shared-pattern discipline).
-    "q_html_robots_gate" -> ((s, d) => {
+    Op("q_html_robots_gate", (s, d) => {
       val arm = pmod(col("doc_id"), lit(6))
       val meta = when(arm === 0,
           lit("<meta name=\"ROBOTS\" content=\"NOINDEX, follow\">"))
@@ -112,71 +117,150 @@ object CurationQueries {
         .filter(!graft.llm.Html.robotsNoindex(col("html")))
         .select(col("doc_id"), pmod(col("doc_id"), lit(6)).cast("long").as("arm"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // the same two robots patterns, SQL-quoted, over the same arm fixture
+      Oracle {
+        val Seq(p1, p2) = graft.llm.Html.robotsPatterns("robots")
+          .map(_.replace("'", "''"))
+        s"""WITH h AS (SELECT doc_id, doc_id % 6 AS arm,
+           |  '<html><head>' ||
+           |  CASE doc_id % 6
+           |    WHEN 0 THEN '<meta name="ROBOTS" content="NOINDEX, follow">'
+           |    WHEN 1 THEN '<meta content=''none'' name=robots>'
+           |    WHEN 2 THEN '<meta name="robots" content="index, follow">'
+           |    WHEN 3 THEN '<meta name="googlebot" content="noindex">'
+           |    WHEN 5 THEN '<meta name=robots>stray prose content="noindex none" trap'
+           |    ELSE '' END ||
+           |  '</head><body><p>' || text || '</p></body></html>' AS html
+           |  FROM documents)
+           |SELECT doc_id, arm FROM h
+           |WHERE NOT (regexp_matches(html, '$p1')
+           |           OR regexp_matches(html, '$p2'))
+           |ORDER BY doc_id""".stripMargin
+      }),
 
     // BM25 targeted mining: top-50 docs for the literal term query,
     // ranked on the 6-dp-rounded score (engine-stable boundary).
-    "q_bm25_mine" -> ((s, d) => {
+    Op("q_bm25_mine", (s, d) => {
       Retrieval.withBm25(Tables.documents(s, d), col("text"), Bm25Terms)
         .select(col("doc_id"), round(col("bm25"), 6).as("bm25"))
         .orderBy(col("bm25").desc, col("doc_id"))
         .limit(50)
-    }),
+    }, Oracle(
+      s"""WITH tk AS (SELECT doc_id, string_split(text, ' ') AS t
+         |            FROM documents),
+         |sc AS (SELECT doc_id,
+         |         ${Bm25Terms.map(bm25TermSql).mkString(" + ")} AS raw
+         |       FROM tk)
+         |SELECT doc_id, round(raw, 6) AS bm25 FROM sc
+         |ORDER BY round(raw, 6) DESC, doc_id LIMIT 50""".stripMargin)),
 
     // DSIR (Xie et al. 2023): integer milli-nat importance weight of every
     // raw doc against the lang='en' target slice — hashed-bigram bucket
     // log-likelihood ratios, summed per doc at scan speed.
-    "q_dsir_weights" -> ((s, d) => {
+    Op("q_dsir_weights", (s, d) => {
       val raw = Tables.documents(s, d)
       Dsir.withWeights(raw, raw.filter(col("lang") === "en"), col("text"))
         .select(col("doc_id"), col("lang"), col("dsir_w"))
         .orderBy(col("doc_id"))
-    }),
+    }, Oracle(
+      s"""$DsirCtes
+         |SELECT doc_id, lang, dsir_w FROM dw ORDER BY doc_id""".stripMargin)),
 
     // The selection step: top-100 most target-like docs, deterministic
     // (w DESC, doc_id) tiebreak — the resample that makes the raw corpus
     // look like the target.
-    "q_dsir_select" -> ((s, d) => {
+    Op("q_dsir_select", (s, d) => {
       val raw = Tables.documents(s, d)
       Dsir.select(raw, raw.filter(col("lang") === "en"), col("text"),
           col("doc_id"), k = 100)
         .select(col("doc_id"), col("lang"), col("dsir_w"))
-    }),
+    }, Oracle(
+      s"""$DsirCtes
+         |SELECT doc_id, lang, dsir_w FROM dw
+         |ORDER BY dsir_w DESC, doc_id LIMIT 100""".stripMargin)),
 
     // Corpus-trained conditional trigram LM — the learned model's top-20
     // rows (count-desc head; the full model keeps TopM=4096).
-    "q_lm_train" -> ((s, d) => {
+    Op("q_lm_train", (s, d) => {
       LmTrain.trainModel(Tables.documents(s, d), col("text"))
         .orderBy(col("cnt").desc, col("tri"))
         .limit(20)
-    }),
+    }, Oracle(
+      s"""$LmTrainCtes
+         |SELECT tri, CAST(cnt AS BIGINT) AS cnt, cost FROM model
+         |ORDER BY cnt DESC, tri LIMIT 20""".stripMargin)),
 
     // Every doc scored under the trained model: total milli-nat NLL and
     // the per-window signal — CCNet's perplexity filter with the reference
     // model estimated from the corpus itself.
-    "q_lm_train_score" -> ((s, d) => {
+    Op("q_lm_train_score", (s, d) => {
       val docs = Tables.documents(s, d)
       LmTrain.withTrainedNll(docs, col("text"),
           LmTrain.collectModel(LmTrain.trainModel(docs, col("text"))))
         .select(col("doc_id"), col("n_win"), col("nll_t"), col("lm_t_mw"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // sparse restatement: matched windows join the model; the remainder
+      // pays the UnseenCost floor (the LangIdScoreCtes pattern)
+      Oracle(
+      s"""$LmTrainCtes,
+         |nwv AS (SELECT doc_id, greatest(len(p) - 2, 0) AS n_win FROM nrm),
+         |mh AS (SELECT t.doc_id, count(*) AS matched, sum(m.cost) AS mc
+         |       FROM twin t JOIN model m USING (tri) GROUP BY 1),
+         |sc AS (SELECT n.doc_id, n.n_win,
+         |              coalesce(mh.mc, 0) +
+         |                (n.n_win - coalesce(mh.matched, 0)) *
+         |                ${graft.llm.LmScore.UnseenCost} AS nll_t
+         |       FROM nwv n LEFT JOIN mh USING (doc_id))
+         |SELECT doc_id, CAST(n_win AS BIGINT) AS n_win,
+         |       CAST(nll_t AS BIGINT) AS nll_t,
+         |       CAST(CASE WHEN n_win > 0 THEN nll_t // n_win ELSE 0 END
+         |            AS BIGINT) AS lm_t_mw
+         |FROM sc ORDER BY doc_id""".stripMargin)),
 
     // Exact substring duplication (Lee et al. 2022): per-doc w-token-window
     // report over the cross-copy fixture. Docs under W tokens carry no
     // windows and are excluded (matching the oracle's len(t) >= W guard).
-    "q_dedup_substring" -> ((s, d) => {
+    Op("q_dedup_substring", (s, d) => {
       SpanDedup.report(docsSpanFix(s, d), col("doc_id"), col("text"))
         .orderBy(col("doc_id"))
-    }),
+    }, Oracle(
+      s"""$SpanCtes
+         |SELECT nw.doc_id, CAST(nw.n_windows AS BIGINT) AS n_windows,
+         |       CAST(coalesce(nd.n_dup, 0) AS BIGINT) AS n_dup,
+         |       round(coalesce(nd.n_dup, 0) * 1.0 / nw.n_windows, 6) AS dup_frac
+         |FROM nw LEFT JOIN nd USING (doc_id) ORDER BY nw.doc_id""".stripMargin)),
 
     // Substring-dedup APPLY: duplicated w-token windows keep only their
     // global first occurrence; other occurrences' tokens are cut. Plant
     // docs lose their copied prefix, base docs (the owners) keep theirs.
-    "q_dedup_substring_apply" -> ((s, d) => {
+    Op("q_dedup_substring_apply", (s, d) => {
       SpanDedup.dedupApply(docsSpanFix(s, d), col("doc_id"), col("text"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // owner = rank-1 occurrence of each duplicated hash in (doc, start)
+      // order; every later occurrence flags its start; a token is cut when
+      // any flagged [s, s+w-1] range covers it
+      Oracle(
+      s"""$SpanCtes,
+         |flag AS (SELECT doc_id, s FROM (
+         |           SELECT doc_id, s,
+         |                  row_number() OVER (PARTITION BY h, h2
+         |                                     ORDER BY doc_id, s) AS rk,
+         |                  count(*) OVER (PARTITION BY h, h2) AS n
+         |           FROM wh) WHERE n >= 2 AND rk > 1),
+         |cuts AS (SELECT doc_id, list_sort(list(s)) AS cs FROM flag GROUP BY 1),
+         |kept AS (SELECT t.doc_id, t.t,
+         |           list_filter(generate_series(1, len(t.t)), j ->
+         |             len(list_filter(coalesce(c.cs, []),
+         |               s -> s <= j AND j < s + ${SpanDedup.W})) = 0) AS kp
+         |         FROM tok t LEFT JOIN cuts c USING (doc_id))
+         |SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens,
+         |       CAST(len(kp) AS BIGINT) AS n_kept,
+         |       coalesce(array_to_string(list_transform(kp, j -> t[j]), ' '),
+         |                '') AS kept_text
+         |FROM kept ORDER BY doc_id""".stripMargin)),
 
     // Engine-native document embedder (r16 verdict #6): fixed-dim
     // hashed-bigram count vector per doc — the no-model baseline that
@@ -184,7 +268,7 @@ object CurationQueries {
     // counts ⇒ full oracle on the vector itself, serialized to a CSV
     // string (registered queries emit atomic columns only — the driver's
     // canonicalizer cannot hash array cells; r17 verdict #1).
-    "q_embed_hashed" -> ((s, d) => {
+    Op("q_embed_hashed", (s, d) => {
       Tables.documents(s, d)
         .select(col("doc_id"),
           graft.llm.Embed.hashedEmbedding(col("text")).as("embedding"))
@@ -196,7 +280,25 @@ object CurationQueries {
         // releases per query.
         .persist()
         .orderBy(col("doc_id"))
-    }),
+    },
+      // the embedder restated: same token stream, same bigram poly hash
+      // mod dim, per-slot occurrence counts, same CSV serialization
+      Oracle {
+        val dim = graft.llm.Embed.Dim
+        s"""WITH tok AS (SELECT doc_id,
+           |         list_filter(string_split(replace(text, chr(10), ' '), ' '),
+           |                     x -> len(x) > 0) AS t
+           |       FROM documents),
+           |bk AS (SELECT doc_id,
+           |         list_transform(generate_series(1, len(t) - 1),
+           |           i -> ${polyHashSql("t[i] || ' ' || t[i+1]")} % $dim) AS bks
+           |       FROM tok)
+           |SELECT doc_id, CAST(len(bks) AS BIGINT) AS n_grams,
+           |       array_to_string(list_transform(generate_series(0, ${dim - 1}),
+           |         j -> CAST(len(list_filter(bks, b -> b = j)) AS BIGINT)), ',')
+           |         AS embedding_csv
+           |FROM bk ORDER BY doc_id""".stripMargin
+      }),
 
     // End-to-end semantic dedup from TEXT: embed (hashed bigrams) →
     // normalize → exact-collapse → stride cells → anchor-capped
@@ -213,18 +315,87 @@ object CurationQueries {
     // n·64 per cell — linear. q_dedup_semdedup_text_full keeps the
     // paper's uncapped form as the verify-only twin; EmbedSpec pins
     // capped ⊇ uncapped with plants dropped in both.
-    "q_dedup_semdedup_text" -> ((s, d) => {
+    Op("q_dedup_semdedup_text", (s, d) => {
       graft.llm.Similarity.semDeDupSurvivors(docsEmbFix(s, d),
           centroids = semdedupTextCentroids(s, d), tau = 0.999, nBits = 0,
           anchorCap = 64)
         .select(col("vec_id"))
         .orderBy(col("vec_id"))
-    }),
+    },
+      // the full text→embed→semdedup chain recomputed from scratch: the
+      // embedder CTEs over the plant fixture, then the capped q_dedup_semdedup
+      // oracle's collapse/argmin/anchor-pair/anti chain verbatim
+      Oracle {
+        val dim = graft.llm.Embed.Dim
+        s"""WITH sfx AS (SELECT doc_id, text FROM documents
+           |             UNION ALL
+           |             SELECT doc_id + 900000 AS doc_id, text
+           |             FROM documents WHERE doc_id % 7 = 0),
+           |tok AS (SELECT doc_id,
+           |         list_filter(string_split(replace(text, chr(10), ' '), ' '),
+           |                     x -> len(x) > 0) AS t
+           |       FROM sfx),
+           |bk AS (SELECT doc_id,
+           |         list_transform(generate_series(1, len(t) - 1),
+           |           i -> ${polyHashSql("t[i] || ' ' || t[i+1]")} % $dim) AS bks
+           |       FROM tok),
+           |e2 AS (SELECT doc_id AS vec_id,
+           |         list_transform(generate_series(0, ${dim - 1}),
+           |           j -> CAST(len(list_filter(bks, b -> b = j)) AS DOUBLE)) AS v
+           |       FROM bk),
+           |nrm AS (SELECT vec_id, v,
+           |               list_reduce(list_transform(v, x -> x * x),
+           |                 (a, b) -> a + b) AS n2
+           |        FROM e2),
+           |q AS (SELECT vec_id, n2,
+           |             CASE WHEN n2 > 0
+           |                  THEN list_transform(v, x -> x / sqrt(n2))
+           |                  ELSE v END AS nv
+           |      FROM nrm),
+           |qq AS (SELECT vec_id, n2, nv,
+           |              list_transform(nv, x -> CAST(floor(x * 100) AS BIGINT)) AS qv
+           |       FROM q),
+           |mn AS (SELECT vec_id, nv, qv,
+           |              min(vec_id) OVER (PARTITION BY
+           |                CASE WHEN n2 > 0 THEN nv
+           |                     ELSE [CAST(-(vec_id + 1) AS DOUBLE)] END) AS mn
+           |       FROM qq),
+           |reps AS (SELECT vec_id, nv, qv FROM mn WHERE vec_id = mn),
+           |exl AS (SELECT vec_id AS loser FROM mn WHERE vec_id > mn),
+           |cent AS (SELECT vec_id AS cell, qv AS cqv FROM qq
+           |         WHERE vec_id IN (SELECT doc_id FROM documents
+           |                          WHERE doc_id % 101 = 0 AND doc_id < 1616)),
+           |asg AS (SELECT r.vec_id, cent.cell,
+           |               list_reduce(list_transform(generate_series(1, len(r.qv)),
+           |                 i -> (r.qv[i] - cqv[i]) * (r.qv[i] - cqv[i])),
+           |                 (a, b) -> a + b) AS il2
+           |        FROM reps r, cent),
+           |cells AS (SELECT vec_id, cell FROM asg
+           |          QUALIFY row_number() OVER (PARTITION BY vec_id
+           |                                     ORDER BY il2, cell) = 1),
+           |k2 AS (SELECT c.vec_id, c.cell, r.nv
+           |       FROM cells c JOIN reps r ON r.vec_id = c.vec_id),
+           |anc AS (SELECT vec_id, cell, nv FROM (
+           |          SELECT vec_id, cell, nv,
+           |                 row_number() OVER (PARTITION BY cell
+           |                                    ORDER BY vec_id) AS rk
+           |          FROM k2) WHERE rk <= 64),
+           |nls AS (
+           |  SELECT DISTINCT b.vec_id AS loser
+           |  FROM anc a
+           |  JOIN k2 b ON a.cell = b.cell AND a.vec_id < b.vec_id
+           |  WHERE list_reduce(list_transform(generate_series(1, len(a.nv)),
+           |          i -> a.nv[i] * b.nv[i]), (x, y) -> x + y) >= 0.999)
+           |SELECT vec_id FROM e2
+           |WHERE vec_id NOT IN (SELECT loser FROM exl
+           |                     UNION SELECT loser FROM nls)
+           |ORDER BY vec_id""".stripMargin
+      }),
 
     // The paper's literal all-pairs form over the same text→embed chain —
     // verify-only (its within-cell quadratic on the clumped corpus is the
     // retired 10x waiver); stays as the full-oracle semantics pin.
-    "q_dedup_semdedup_text_full" -> ((s, d) => {
+    Op("q_dedup_semdedup_text_full", (s, d) => {
       graft.llm.Similarity.semDeDupSurvivors(docsEmbFix(s, d),
           centroids = Tables.documents(s, d)
             .filter(col("doc_id") % 101 === 0)
@@ -233,14 +404,68 @@ object CurationQueries {
           tau = 0.999, nBits = 0)
         .select(col("vec_id"))
         .orderBy(col("vec_id"))
-    }),
+    },
+      // the uncapped all-pairs twin (verify-only): the r17 oracle verbatim
+      VerifyOnly {
+        val dim = graft.llm.Embed.Dim
+        s"""WITH sfx AS (SELECT doc_id, text FROM documents
+           |             UNION ALL
+           |             SELECT doc_id + 900000 AS doc_id, text
+           |             FROM documents WHERE doc_id % 7 = 0),
+           |tok AS (SELECT doc_id,
+           |         list_filter(string_split(replace(text, chr(10), ' '), ' '),
+           |                     x -> len(x) > 0) AS t
+           |       FROM sfx),
+           |bk AS (SELECT doc_id,
+           |         list_transform(generate_series(1, len(t) - 1),
+           |           i -> ${polyHashSql("t[i] || ' ' || t[i+1]")} % $dim) AS bks
+           |       FROM tok),
+           |e2 AS (SELECT doc_id AS vec_id,
+           |         list_transform(generate_series(0, ${dim - 1}),
+           |           j -> CAST(len(list_filter(bks, b -> b = j)) AS DOUBLE)) AS v
+           |       FROM bk),
+           |nrm AS (SELECT vec_id, v,
+           |               list_reduce(list_transform(v, x -> x * x),
+           |                 (a, b) -> a + b) AS n2
+           |        FROM e2),
+           |q AS (SELECT vec_id,
+           |             CASE WHEN n2 > 0
+           |                  THEN list_transform(v, x -> x / sqrt(n2))
+           |                  ELSE v END AS nv
+           |      FROM nrm),
+           |qq AS (SELECT vec_id, nv,
+           |              list_transform(nv, x -> CAST(floor(x * 100) AS BIGINT)) AS qv
+           |       FROM q),
+           |cent AS (SELECT vec_id AS cell, qv AS cqv FROM qq
+           |         WHERE vec_id IN (SELECT doc_id FROM documents
+           |                          WHERE doc_id % 101 = 0)),
+           |asg AS (SELECT qq.vec_id, cent.cell,
+           |               list_reduce(list_transform(generate_series(1, len(qv)),
+           |                 i -> (qv[i] - cqv[i]) * (qv[i] - cqv[i])),
+           |                 (a, b) -> a + b) AS il2
+           |        FROM qq, cent),
+           |cells AS (SELECT vec_id, cell FROM asg
+           |          QUALIFY row_number() OVER (PARTITION BY vec_id
+           |                                     ORDER BY il2, cell) = 1),
+           |losers AS (
+           |  SELECT DISTINCT b.vec_id AS loser
+           |  FROM cells a
+           |  JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id
+           |  JOIN qq qa ON qa.vec_id = a.vec_id
+           |  JOIN qq qb ON qb.vec_id = b.vec_id
+           |  WHERE list_reduce(list_transform(generate_series(1, len(qa.nv)),
+           |          i -> qa.nv[i] * qb.nv[i]), (x, y) -> x + y) >= 0.999)
+           |SELECT vec_id FROM e2
+           |WHERE vec_id NOT IN (SELECT loser FROM losers)
+           |ORDER BY vec_id""".stripMargin
+      }),
 
     // Cluster-balanced subsample: integer-L2 cells over the CAPPED stride
     // centroids (fixed 16-slot budget, the PQ-codebook pattern — an
     // uncapped stride grows |centroids| with the corpus and the broadcast
     // argmin goes quadratic), ≤10 members per cell in deterministic
     // scrambled-id order — the topic-balance pass.
-    "q_sample_cluster" -> ((s, d) => {
+    Op("q_sample_cluster", (s, d) => {
       graft.llm.Sampling.clusterBalanced(
           Tables.embeddings(s, d),
           Tables.embeddings(s, d).filter(col("vec_id") % 101 === 0 &&
@@ -248,7 +473,35 @@ object CurationQueries {
           k = 10)
         .select(col("cell"), col("vec_id"))
         .orderBy(col("cell"), col("vec_id"))
-    }),
+    },
+      // integer-quantized argmin assignment (ties → lowest cell), then the
+      // per-cell scramble-key top-10 (the q_sample_capped rank restatement)
+      Oracle(
+      """WITH qc AS (SELECT vec_id,
+        |         list_transform(CAST(embedding AS DOUBLE[]),
+        |           x -> CAST(floor(x * 100) AS BIGINT)) AS nv
+        |       FROM embeddings),
+        |cb AS (SELECT vec_id AS cell,
+        |         list_transform(CAST(embedding AS DOUBLE[]),
+        |           x -> CAST(floor(x * 100) AS BIGINT)) AS cv
+        |       FROM embeddings WHERE vec_id % 101 = 0 AND vec_id < 1616),
+        |da AS (SELECT q.vec_id, c.cell,
+        |         CAST(list_sum(list_transform(generate_series(1, len(q.nv)),
+        |           t -> (q.nv[t] - c.cv[t]) * (q.nv[t] - c.cv[t]))) AS BIGINT) AS d
+        |       FROM qc q CROSS JOIN cb c),
+        |asg AS (SELECT vec_id, cell FROM (
+        |          SELECT vec_id, cell,
+        |                 row_number() OVER (PARTITION BY vec_id
+        |                                    ORDER BY d, cell) AS rk
+        |          FROM da) WHERE rk = 1),
+        |sk AS (SELECT vec_id, cell,
+        |              ((vec_id % 2147483648) * 2654435761) % 4294967296 AS sk
+        |       FROM asg)
+        |SELECT cell, vec_id FROM (
+        |  SELECT cell, vec_id,
+        |         row_number() OVER (PARTITION BY cell ORDER BY sk, vec_id) AS rk
+        |  FROM sk) WHERE rk <= 10
+        |ORDER BY cell, vec_id""".stripMargin)),
 
     // URL canonicalization (r17 verdict #4 — the crawl's first mile):
     // fragment stripped, scheme+authority lowercased, default port
@@ -258,20 +511,24 @@ object CurationQueries {
     // canonicalize IDENTICALLY; variant 2 keeps a real param and stays
     // distinct. Every step is a codegen'd RE2-subset regex / HOF filter —
     // one scan, zero shuffle, restated verbatim in DuckDB.
-    "q_url_canon" -> ((s, d) => {
+    Op("q_url_canon", (s, d) => {
       docsUrlFix(s, d)
         .select(col("doc_id"), col("url"),
           graft.llm.UrlCuration.canonicalize(col("url")).as("url_canon"))
         .withColumn("host", graft.llm.UrlCuration.host(col("url_canon")))
         .orderBy(col("doc_id"))
-    }),
+    }, Oracle(s"""$UrlCanonCtes
+       |SELECT doc_id, url, url_canon,
+       |       regexp_extract(url_canon,
+       |         '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS host
+       |FROM cn ORDER BY doc_id""".stripMargin)),
 
     // URL dedup keep-first-fetch: one map-side-combined groupBy on the
     // canon key — the cheapest dedup a crawl runs, BEFORE any text parse.
     // At crawl scale the canon key is near-unique, so the combine carries
     // little dup weight and the shuffle is the irreducible one a global
     // dedup needs (no window, no join-back).
-    "q_url_dedup" -> ((s, d) => {
+    Op("q_url_dedup", (s, d) => {
       docsUrlFix(s, d)
         .select(graft.llm.UrlCuration.canonicalize(col("url"))
           .as("url_canon"), col("doc_id"))
@@ -279,7 +536,9 @@ object CurationQueries {
         .agg(min(col("doc_id")).as("keeper_id"),
           count(lit(1)).as("n_fetches"))
         .orderBy(col("url_canon"))
-    }),
+    }, Oracle(s"""$UrlCanonCtes
+       |SELECT url_canon, min(doc_id) AS keeper_id, count(*) AS n_fetches
+       |FROM cn GROUP BY 1 ORDER BY url_canon""".stripMargin)),
 
     // Per-domain cap (r18): the crawl-balance pass after URL dedup — no
     // host may contribute more than k pages, keepers chosen by the
@@ -287,7 +546,7 @@ object CurationQueries {
     // uniform pseudo-random, engine-restatable, and the two-phase salted
     // top-k means no task ever sorts a whole mega-domain). Chain: canon →
     // first-fetch keeper per URL → host key → capped top-k.
-    "q_url_domain_cap" -> ((s, d) => {
+    Op("q_url_domain_cap", (s, d) => {
       val kept = docsUrlFix(s, d)
         .select(graft.llm.UrlCuration.canonicalize(col("url"))
           .as("url_canon"), col("doc_id"))
@@ -297,7 +556,22 @@ object CurationQueries {
       graft.llm.Sampling.topKPerGroup(kept, col("host"), col("doc_id"), k = 10)
         .select(col("host"), col("doc_id"))
         .orderBy(col("host"), col("doc_id"))
-    }),
+    },
+      // keeper per canon URL → host → scramble-key rank ≤ 10 per host (the
+      // q_sample_capped scramble restated)
+      Oracle(s"""$UrlCanonCtes,
+       |kp AS (SELECT url_canon, min(doc_id) AS doc_id FROM cn GROUP BY 1),
+       |hh AS (SELECT doc_id,
+       |         regexp_extract(url_canon,
+       |           '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS host,
+       |         ((doc_id % 2147483648) * 2654435761) % 4294967296 AS sk
+       |       FROM kp),
+       |r AS (SELECT host, doc_id,
+       |             row_number() OVER (PARTITION BY host
+       |                                ORDER BY sk, doc_id) AS rk
+       |      FROM hh)
+       |SELECT host, doc_id FROM r WHERE rk <= 10
+       |ORDER BY host, doc_id""".stripMargin)),
 
     // Group-aware train/val/test split (r18): the leakage guard every
     // dedup paper recommends — split by HOST, not by document, so the
@@ -306,7 +580,7 @@ object CurationQueries {
     // code-point fold, restated verbatim in DuckDB) feeds the same
     // scramble-key split arithmetic q_split uses; output proves the
     // invariant in data — every host lands in exactly ONE split row.
-    "q_split_by_host" -> ((s, d) => {
+    Op("q_split_by_host", (s, d) => {
       docsUrlFix(s, d)
         .select(col("doc_id"),
           graft.llm.UrlCuration.host(
@@ -318,7 +592,27 @@ object CurationQueries {
         .groupBy(col("host"), col("split"))
         .agg(count(lit(1)).as("n_docs"))
         .orderBy(col("host"))
-    }),
+    },
+      // host poly hash → scramble → the q_split bound arithmetic (floor of
+      // the cumulative-fraction ladder over 2^32, computed in Scala double
+      // math and restated as the exact literals)
+      Oracle(s"""$UrlCanonCtes,
+       |hh AS (SELECT doc_id,
+       |         regexp_extract(url_canon,
+       |           '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS host
+       |       FROM cn),
+       |hk AS (SELECT doc_id, host,
+       |         ${polyHashSql("host")} AS hkey
+       |       FROM hh),
+       |sp AS (SELECT doc_id, host,
+       |         CASE WHEN ((hkey % 2147483648) * 2654435761) % 4294967296
+       |                   < 3435973836 THEN 'train'
+       |              WHEN ((hkey % 2147483648) * 2654435761) % 4294967296
+       |                   < 3865470566 THEN 'val'
+       |              ELSE 'test' END AS split
+       |       FROM hk)
+       |SELECT host, split, count(*) AS n_docs
+       |FROM sp GROUP BY 1, 2 ORDER BY host""".stripMargin)),
 
     // URL blocklist filter (the C4 badlist / RefinedWeb URL-filter pass):
     // exact-or-dot-suffix domain match + pattern match, both against the
@@ -338,7 +632,7 @@ object CurationQueries {
     // (doc_id, url_canon, host) relation — the URL table, input-sized —
     // and the blocklist predicate + sort read the cache (the q_mm_phash
     // persist-before-sort precedent; CacheHygiene releases per query).
-    "q_url_filter" -> ((s, d) => {
+    Op("q_url_filter", (s, d) => {
       val canon = docsUrlFix(s, d)
         .select(col("doc_id"),
           graft.llm.UrlCuration.canonicalize(col("url")).as("url_canon"))
@@ -347,6 +641,19 @@ object CurationQueries {
       graft.llm.UrlCuration.blocklistFilter(canon, col("url_canon"))
         .select(col("doc_id"), col("host"), col("url_canon"))
         .orderBy(col("doc_id"))
+    }, Oracle {
+      val dom = graft.llm.UrlCuration.DefaultBlockedDomains.map(dd =>
+        s"host = '$dd' OR ends_with(host, '.$dd')").mkString(" OR ")
+      val pat = graft.llm.UrlCuration.DefaultBlockedPatterns.map(p =>
+        s"regexp_matches(url_canon, '$p')").mkString(" OR ")
+      s"""$UrlCanonCtes,
+         |hh AS (SELECT doc_id, url_canon,
+         |         regexp_extract(url_canon,
+         |           '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS host
+         |       FROM cn)
+         |SELECT doc_id, host, url_canon FROM hh
+         |WHERE NOT ($dom) AND NOT ($pat)
+         |ORDER BY doc_id""".stripMargin
     }))
 
   /** URL fixture host pool — position 2 is mixed-case (canonicalization
@@ -518,341 +825,6 @@ object CurationQueries {
        |   ($tf + 1.2 * (1.0 - 0.75 + 0.75 * CAST(len(t) AS DOUBLE) /
        |     (SELECT avg(len(t)) FROM tk))))""".stripMargin
   }
-
-  def oracles: Map[String, String] = Map(
-    "q_html_clean" ->
-      s"""WITH hfx AS ($HtmlFixSql)
-         |SELECT doc_id, ${htmlToTextSql("html")} AS clean_text,
-         |       CAST(len(html) AS BIGINT) AS n_raw,
-         |       CAST(len(${htmlToTextSql("html")}) AS BIGINT) AS n_clean
-         |FROM hfx ORDER BY doc_id""".stripMargin,
-
-    "q_bm25_mine" ->
-      s"""WITH tk AS (SELECT doc_id, string_split(text, ' ') AS t
-         |            FROM documents),
-         |sc AS (SELECT doc_id,
-         |         ${Bm25Terms.map(bm25TermSql).mkString(" + ")} AS raw
-         |       FROM tk)
-         |SELECT doc_id, round(raw, 6) AS bm25 FROM sc
-         |ORDER BY round(raw, 6) DESC, doc_id LIMIT 50""".stripMargin,
-
-    "q_dsir_weights" ->
-      s"""$DsirCtes
-         |SELECT doc_id, lang, dsir_w FROM dw ORDER BY doc_id""".stripMargin,
-
-    "q_dsir_select" ->
-      s"""$DsirCtes
-         |SELECT doc_id, lang, dsir_w FROM dw
-         |ORDER BY dsir_w DESC, doc_id LIMIT 100""".stripMargin,
-
-    "q_lm_train" ->
-      s"""$LmTrainCtes
-         |SELECT tri, CAST(cnt AS BIGINT) AS cnt, cost FROM model
-         |ORDER BY cnt DESC, tri LIMIT 20""".stripMargin,
-
-    // sparse restatement: matched windows join the model; the remainder
-    // pays the UnseenCost floor (the LangIdScoreCtes pattern)
-    "q_lm_train_score" ->
-      s"""$LmTrainCtes,
-         |nwv AS (SELECT doc_id, greatest(len(p) - 2, 0) AS n_win FROM nrm),
-         |mh AS (SELECT t.doc_id, count(*) AS matched, sum(m.cost) AS mc
-         |       FROM twin t JOIN model m USING (tri) GROUP BY 1),
-         |sc AS (SELECT n.doc_id, n.n_win,
-         |              coalesce(mh.mc, 0) +
-         |                (n.n_win - coalesce(mh.matched, 0)) *
-         |                ${graft.llm.LmScore.UnseenCost} AS nll_t
-         |       FROM nwv n LEFT JOIN mh USING (doc_id))
-         |SELECT doc_id, CAST(n_win AS BIGINT) AS n_win,
-         |       CAST(nll_t AS BIGINT) AS nll_t,
-         |       CAST(CASE WHEN n_win > 0 THEN nll_t // n_win ELSE 0 END
-         |            AS BIGINT) AS lm_t_mw
-         |FROM sc ORDER BY doc_id""".stripMargin,
-
-    "q_dedup_substring" ->
-      s"""$SpanCtes
-         |SELECT nw.doc_id, CAST(nw.n_windows AS BIGINT) AS n_windows,
-         |       CAST(coalesce(nd.n_dup, 0) AS BIGINT) AS n_dup,
-         |       round(coalesce(nd.n_dup, 0) * 1.0 / nw.n_windows, 6) AS dup_frac
-         |FROM nw LEFT JOIN nd USING (doc_id) ORDER BY nw.doc_id""".stripMargin,
-
-    // owner = rank-1 occurrence of each duplicated hash in (doc, start)
-    // order; every later occurrence flags its start; a token is cut when
-    // any flagged [s, s+w-1] range covers it
-    "q_dedup_substring_apply" ->
-      s"""$SpanCtes,
-         |flag AS (SELECT doc_id, s FROM (
-         |           SELECT doc_id, s,
-         |                  row_number() OVER (PARTITION BY h, h2
-         |                                     ORDER BY doc_id, s) AS rk,
-         |                  count(*) OVER (PARTITION BY h, h2) AS n
-         |           FROM wh) WHERE n >= 2 AND rk > 1),
-         |cuts AS (SELECT doc_id, list_sort(list(s)) AS cs FROM flag GROUP BY 1),
-         |kept AS (SELECT t.doc_id, t.t,
-         |           list_filter(generate_series(1, len(t.t)), j ->
-         |             len(list_filter(coalesce(c.cs, []),
-         |               s -> s <= j AND j < s + ${SpanDedup.W})) = 0) AS kp
-         |         FROM tok t LEFT JOIN cuts c USING (doc_id))
-         |SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens,
-         |       CAST(len(kp) AS BIGINT) AS n_kept,
-         |       coalesce(array_to_string(list_transform(kp, j -> t[j]), ' '),
-         |                '') AS kept_text
-         |FROM kept ORDER BY doc_id""".stripMargin,
-
-    // the embedder restated: same token stream, same bigram poly hash
-    // mod dim, per-slot occurrence counts, same CSV serialization
-    "q_embed_hashed" -> {
-      val dim = graft.llm.Embed.Dim
-      s"""WITH tok AS (SELECT doc_id,
-         |         list_filter(string_split(replace(text, chr(10), ' '), ' '),
-         |                     x -> len(x) > 0) AS t
-         |       FROM documents),
-         |bk AS (SELECT doc_id,
-         |         list_transform(generate_series(1, len(t) - 1),
-         |           i -> ${polyHashSql("t[i] || ' ' || t[i+1]")} % $dim) AS bks
-         |       FROM tok)
-         |SELECT doc_id, CAST(len(bks) AS BIGINT) AS n_grams,
-         |       array_to_string(list_transform(generate_series(0, ${dim - 1}),
-         |         j -> CAST(len(list_filter(bks, b -> b = j)) AS BIGINT)), ',')
-         |         AS embedding_csv
-         |FROM bk ORDER BY doc_id""".stripMargin
-    },
-
-    // the full text→embed→semdedup chain recomputed from scratch: the
-    // embedder CTEs over the plant fixture, then the capped q_dedup_semdedup
-    // oracle's collapse/argmin/anchor-pair/anti chain verbatim
-    "q_dedup_semdedup_text" -> {
-      val dim = graft.llm.Embed.Dim
-      s"""WITH sfx AS (SELECT doc_id, text FROM documents
-         |             UNION ALL
-         |             SELECT doc_id + 900000 AS doc_id, text
-         |             FROM documents WHERE doc_id % 7 = 0),
-         |tok AS (SELECT doc_id,
-         |         list_filter(string_split(replace(text, chr(10), ' '), ' '),
-         |                     x -> len(x) > 0) AS t
-         |       FROM sfx),
-         |bk AS (SELECT doc_id,
-         |         list_transform(generate_series(1, len(t) - 1),
-         |           i -> ${polyHashSql("t[i] || ' ' || t[i+1]")} % $dim) AS bks
-         |       FROM tok),
-         |e2 AS (SELECT doc_id AS vec_id,
-         |         list_transform(generate_series(0, ${dim - 1}),
-         |           j -> CAST(len(list_filter(bks, b -> b = j)) AS DOUBLE)) AS v
-         |       FROM bk),
-         |nrm AS (SELECT vec_id, v,
-         |               list_reduce(list_transform(v, x -> x * x),
-         |                 (a, b) -> a + b) AS n2
-         |        FROM e2),
-         |q AS (SELECT vec_id, n2,
-         |             CASE WHEN n2 > 0
-         |                  THEN list_transform(v, x -> x / sqrt(n2))
-         |                  ELSE v END AS nv
-         |      FROM nrm),
-         |qq AS (SELECT vec_id, n2, nv,
-         |              list_transform(nv, x -> CAST(floor(x * 100) AS BIGINT)) AS qv
-         |       FROM q),
-         |mn AS (SELECT vec_id, nv, qv,
-         |              min(vec_id) OVER (PARTITION BY
-         |                CASE WHEN n2 > 0 THEN nv
-         |                     ELSE [CAST(-(vec_id + 1) AS DOUBLE)] END) AS mn
-         |       FROM qq),
-         |reps AS (SELECT vec_id, nv, qv FROM mn WHERE vec_id = mn),
-         |exl AS (SELECT vec_id AS loser FROM mn WHERE vec_id > mn),
-         |cent AS (SELECT vec_id AS cell, qv AS cqv FROM qq
-         |         WHERE vec_id IN (SELECT doc_id FROM documents
-         |                          WHERE doc_id % 101 = 0 AND doc_id < 1616)),
-         |asg AS (SELECT r.vec_id, cent.cell,
-         |               list_reduce(list_transform(generate_series(1, len(r.qv)),
-         |                 i -> (r.qv[i] - cqv[i]) * (r.qv[i] - cqv[i])),
-         |                 (a, b) -> a + b) AS il2
-         |        FROM reps r, cent),
-         |cells AS (SELECT vec_id, cell FROM asg
-         |          QUALIFY row_number() OVER (PARTITION BY vec_id
-         |                                     ORDER BY il2, cell) = 1),
-         |k2 AS (SELECT c.vec_id, c.cell, r.nv
-         |       FROM cells c JOIN reps r ON r.vec_id = c.vec_id),
-         |anc AS (SELECT vec_id, cell, nv FROM (
-         |          SELECT vec_id, cell, nv,
-         |                 row_number() OVER (PARTITION BY cell
-         |                                    ORDER BY vec_id) AS rk
-         |          FROM k2) WHERE rk <= 64),
-         |nls AS (
-         |  SELECT DISTINCT b.vec_id AS loser
-         |  FROM anc a
-         |  JOIN k2 b ON a.cell = b.cell AND a.vec_id < b.vec_id
-         |  WHERE list_reduce(list_transform(generate_series(1, len(a.nv)),
-         |          i -> a.nv[i] * b.nv[i]), (x, y) -> x + y) >= 0.999)
-         |SELECT vec_id FROM e2
-         |WHERE vec_id NOT IN (SELECT loser FROM exl
-         |                     UNION SELECT loser FROM nls)
-         |ORDER BY vec_id""".stripMargin
-    },
-
-    // the uncapped all-pairs twin (verify-only): the r17 oracle verbatim
-    "q_dedup_semdedup_text_full" -> {
-      val dim = graft.llm.Embed.Dim
-      s"""WITH sfx AS (SELECT doc_id, text FROM documents
-         |             UNION ALL
-         |             SELECT doc_id + 900000 AS doc_id, text
-         |             FROM documents WHERE doc_id % 7 = 0),
-         |tok AS (SELECT doc_id,
-         |         list_filter(string_split(replace(text, chr(10), ' '), ' '),
-         |                     x -> len(x) > 0) AS t
-         |       FROM sfx),
-         |bk AS (SELECT doc_id,
-         |         list_transform(generate_series(1, len(t) - 1),
-         |           i -> ${polyHashSql("t[i] || ' ' || t[i+1]")} % $dim) AS bks
-         |       FROM tok),
-         |e2 AS (SELECT doc_id AS vec_id,
-         |         list_transform(generate_series(0, ${dim - 1}),
-         |           j -> CAST(len(list_filter(bks, b -> b = j)) AS DOUBLE)) AS v
-         |       FROM bk),
-         |nrm AS (SELECT vec_id, v,
-         |               list_reduce(list_transform(v, x -> x * x),
-         |                 (a, b) -> a + b) AS n2
-         |        FROM e2),
-         |q AS (SELECT vec_id,
-         |             CASE WHEN n2 > 0
-         |                  THEN list_transform(v, x -> x / sqrt(n2))
-         |                  ELSE v END AS nv
-         |      FROM nrm),
-         |qq AS (SELECT vec_id, nv,
-         |              list_transform(nv, x -> CAST(floor(x * 100) AS BIGINT)) AS qv
-         |       FROM q),
-         |cent AS (SELECT vec_id AS cell, qv AS cqv FROM qq
-         |         WHERE vec_id IN (SELECT doc_id FROM documents
-         |                          WHERE doc_id % 101 = 0)),
-         |asg AS (SELECT qq.vec_id, cent.cell,
-         |               list_reduce(list_transform(generate_series(1, len(qv)),
-         |                 i -> (qv[i] - cqv[i]) * (qv[i] - cqv[i])),
-         |                 (a, b) -> a + b) AS il2
-         |        FROM qq, cent),
-         |cells AS (SELECT vec_id, cell FROM asg
-         |          QUALIFY row_number() OVER (PARTITION BY vec_id
-         |                                     ORDER BY il2, cell) = 1),
-         |losers AS (
-         |  SELECT DISTINCT b.vec_id AS loser
-         |  FROM cells a
-         |  JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id
-         |  JOIN qq qa ON qa.vec_id = a.vec_id
-         |  JOIN qq qb ON qb.vec_id = b.vec_id
-         |  WHERE list_reduce(list_transform(generate_series(1, len(qa.nv)),
-         |          i -> qa.nv[i] * qb.nv[i]), (x, y) -> x + y) >= 0.999)
-         |SELECT vec_id FROM e2
-         |WHERE vec_id NOT IN (SELECT loser FROM losers)
-         |ORDER BY vec_id""".stripMargin
-    },
-
-    // integer-quantized argmin assignment (ties → lowest cell), then the
-    // per-cell scramble-key top-10 (the q_sample_capped rank restatement)
-    "q_sample_cluster" ->
-      """WITH qc AS (SELECT vec_id,
-        |         list_transform(CAST(embedding AS DOUBLE[]),
-        |           x -> CAST(floor(x * 100) AS BIGINT)) AS nv
-        |       FROM embeddings),
-        |cb AS (SELECT vec_id AS cell,
-        |         list_transform(CAST(embedding AS DOUBLE[]),
-        |           x -> CAST(floor(x * 100) AS BIGINT)) AS cv
-        |       FROM embeddings WHERE vec_id % 101 = 0 AND vec_id < 1616),
-        |da AS (SELECT q.vec_id, c.cell,
-        |         CAST(list_sum(list_transform(generate_series(1, len(q.nv)),
-        |           t -> (q.nv[t] - c.cv[t]) * (q.nv[t] - c.cv[t]))) AS BIGINT) AS d
-        |       FROM qc q CROSS JOIN cb c),
-        |asg AS (SELECT vec_id, cell FROM (
-        |          SELECT vec_id, cell,
-        |                 row_number() OVER (PARTITION BY vec_id
-        |                                    ORDER BY d, cell) AS rk
-        |          FROM da) WHERE rk = 1),
-        |sk AS (SELECT vec_id, cell,
-        |              ((vec_id % 2147483648) * 2654435761) % 4294967296 AS sk
-        |       FROM asg)
-        |SELECT cell, vec_id FROM (
-        |  SELECT cell, vec_id,
-        |         row_number() OVER (PARTITION BY cell ORDER BY sk, vec_id) AS rk
-        |  FROM sk) WHERE rk <= 10
-        |ORDER BY cell, vec_id""".stripMargin,
-
-    // the same two robots patterns, SQL-quoted, over the same arm fixture
-    "q_html_robots_gate" -> {
-      val Seq(p1, p2) = graft.llm.Html.robotsPatterns("robots")
-        .map(_.replace("'", "''"))
-      s"""WITH h AS (SELECT doc_id, doc_id % 6 AS arm,
-         |  '<html><head>' ||
-         |  CASE doc_id % 6
-         |    WHEN 0 THEN '<meta name="ROBOTS" content="NOINDEX, follow">'
-         |    WHEN 1 THEN '<meta content=''none'' name=robots>'
-         |    WHEN 2 THEN '<meta name="robots" content="index, follow">'
-         |    WHEN 3 THEN '<meta name="googlebot" content="noindex">'
-         |    WHEN 5 THEN '<meta name=robots>stray prose content="noindex none" trap'
-         |    ELSE '' END ||
-         |  '</head><body><p>' || text || '</p></body></html>' AS html
-         |  FROM documents)
-         |SELECT doc_id, arm FROM h
-         |WHERE NOT (regexp_matches(html, '$p1')
-         |           OR regexp_matches(html, '$p2'))
-         |ORDER BY doc_id""".stripMargin
-    },
-
-    "q_url_canon" -> s"""$UrlCanonCtes
-       |SELECT doc_id, url, url_canon,
-       |       regexp_extract(url_canon,
-       |         '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS host
-       |FROM cn ORDER BY doc_id""".stripMargin,
-
-    "q_url_dedup" -> s"""$UrlCanonCtes
-       |SELECT url_canon, min(doc_id) AS keeper_id, count(*) AS n_fetches
-       |FROM cn GROUP BY 1 ORDER BY url_canon""".stripMargin,
-
-    // keeper per canon URL → host → scramble-key rank ≤ 10 per host (the
-    // q_sample_capped scramble restated)
-    "q_url_domain_cap" -> s"""$UrlCanonCtes,
-       |kp AS (SELECT url_canon, min(doc_id) AS doc_id FROM cn GROUP BY 1),
-       |hh AS (SELECT doc_id,
-       |         regexp_extract(url_canon,
-       |           '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS host,
-       |         ((doc_id % 2147483648) * 2654435761) % 4294967296 AS sk
-       |       FROM kp),
-       |r AS (SELECT host, doc_id,
-       |             row_number() OVER (PARTITION BY host
-       |                                ORDER BY sk, doc_id) AS rk
-       |      FROM hh)
-       |SELECT host, doc_id FROM r WHERE rk <= 10
-       |ORDER BY host, doc_id""".stripMargin,
-
-    // host poly hash → scramble → the q_split bound arithmetic (floor of
-    // the cumulative-fraction ladder over 2^32, computed in Scala double
-    // math and restated as the exact literals)
-    "q_split_by_host" -> s"""$UrlCanonCtes,
-       |hh AS (SELECT doc_id,
-       |         regexp_extract(url_canon,
-       |           '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS host
-       |       FROM cn),
-       |hk AS (SELECT doc_id, host,
-       |         ${polyHashSql("host")} AS hkey
-       |       FROM hh),
-       |sp AS (SELECT doc_id, host,
-       |         CASE WHEN ((hkey % 2147483648) * 2654435761) % 4294967296
-       |                   < 3435973836 THEN 'train'
-       |              WHEN ((hkey % 2147483648) * 2654435761) % 4294967296
-       |                   < 3865470566 THEN 'val'
-       |              ELSE 'test' END AS split
-       |       FROM hk)
-       |SELECT host, split, count(*) AS n_docs
-       |FROM sp GROUP BY 1, 2 ORDER BY host""".stripMargin,
-
-    "q_url_filter" -> {
-      val dom = graft.llm.UrlCuration.DefaultBlockedDomains.map(dd =>
-        s"host = '$dd' OR ends_with(host, '.$dd')").mkString(" OR ")
-      val pat = graft.llm.UrlCuration.DefaultBlockedPatterns.map(p =>
-        s"regexp_matches(url_canon, '$p')").mkString(" OR ")
-      s"""$UrlCanonCtes,
-         |hh AS (SELECT doc_id, url_canon,
-         |         regexp_extract(url_canon,
-         |           '^[a-z][a-z0-9+.-]*://([^/:?#]+)', 1) AS host
-         |       FROM cn)
-         |SELECT doc_id, host, url_canon FROM hh
-         |WHERE NOT ($dom) AND NOT ($pat)
-         |ORDER BY doc_id""".stripMargin
-    })
 
   /** The url fixture + canonicalization chain restated: same host pool,
     * same variant arms, then the exact [[graft.llm.UrlCuration]] steps —

@@ -60,12 +60,12 @@ object HistoQueries {
 
   private val EmptyExpBuckets = "array<struct<index:int,count:bigint>>"
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def ops: Seq[Op] = Seq(
     // A7/A8 — histogram_quantile at 50/95/99 per flag, one multi-percentile
     // UDF pass over the per-group bucket array (evaluated once per GROUP —
     // post-aggregation row volume, so UDF-vs-Expression cost is irrelevant
     // even at 100 TB).
-    "q_a7_hist_quantile" -> ((s, d) => {
+    Op("q_a7_hist_quantile", (s, d) => {
       val ps = array(lit(50.0), lit(95.0), lit(99.0))
       qtyBucketArrays(s, d)
         .withColumn("qs", HistogramFunctions.histogram_quantiles(col("buckets"), ps))
@@ -74,11 +74,34 @@ object HistoQueries {
           round(element_at(col("qs"), 2), 6).as("p95"),
           round(element_at(col("qs"), 3), 6).as("p99"))
         .orderBy(col("flag"))
-    }),
+    }, Oracle(s"""WITH base AS (
+      |  SELECT l_returnflag AS flag, $LeCase AS le FROM lineitem),
+      |hist AS (SELECT flag, le, count(*) AS cnt FROM base GROUP BY 1, 2),
+      |c AS (SELECT flag, le, cnt,
+      |             sum(cnt) OVER (PARTITION BY flag ORDER BY le) AS cum,
+      |             sum(cnt) OVER (PARTITION BY flag) AS total,
+      |             coalesce(lag(le) OVER (PARTITION BY flag ORDER BY le), 0.0) AS prev_le
+      |      FROM hist),
+      |ps AS (SELECT unnest([50.0, 95.0, 99.0]) AS p),
+      |sel AS (SELECT flag, p, le, cnt, cum, total, prev_le,
+      |               row_number() OVER (PARTITION BY flag, p ORDER BY le) AS rn
+      |        FROM c CROSS JOIN ps
+      |        WHERE cum >= total * (p / 100.0)),
+      |q AS (SELECT flag, p,
+      |             CASE WHEN cnt = 0 THEN le
+      |                  WHEN isinf(le) THEN prev_le
+      |                  ELSE prev_le + ((total * (p / 100.0) - (cum - cnt)) / cnt) * (le - prev_le)
+      |             END AS v
+      |      FROM sel WHERE rn = 1)
+      |SELECT flag,
+      |       round(max(CASE WHEN p = 50 THEN v END), 6) AS p50,
+      |       round(max(CASE WHEN p = 95 THEN v END), 6) AS p95,
+      |       round(max(CASE WHEN p = 99 THEN v END), 6) AS p99
+      |FROM q GROUP BY flag ORDER BY flag""".stripMargin)),
 
     // A9 — merge per-(flag, linestatus) bucket groups into per-flag histograms
     // via the explode+reaggregate path (map-side partial agg; no UDAF).
-    "q_a9_bucket_merge" -> ((s, d) => {
+    Op("q_a9_bucket_merge", (s, d) => {
       val perLs = Tables.lineitem(s, d)
         .select(col("l_returnflag").as("flag"), col("l_linestatus").as("ls"),
           leOf(col("l_quantity"), QtyBounds).as("le"))
@@ -91,11 +114,13 @@ object HistoQueries {
         .select(col("flag"), explode(col("buckets")).as("b"))
         .select(col("flag"), col("b.le").as("le"), col("b.count").as("count"))
         .orderBy(col("flag"), col("le"))
-    }),
+    }, Oracle(s"""SELECT l_returnflag AS flag, $LeCase AS le,
+      |       count(*) AS count
+      |FROM lineitem GROUP BY 1, 2 ORDER BY flag, le""".stripMargin)),
 
     // A10 — delta→cumulative→delta round trip: cum is the prefix sum, rt must
     // reproduce the original delta counts exactly.
-    "q_a10_roundtrip" -> ((s, d) => {
+    Op("q_a10_roundtrip", (s, d) => {
       qtyBucketArrays(s, d)
         .withColumn("cum", HistogramFunctions.buckets_to_cumulative(col("buckets")))
         .withColumn("rt", HistogramFunctions.buckets_to_delta(col("cum")))
@@ -106,11 +131,17 @@ object HistoQueries {
           col("z.cum.count").as("cum_count"),
           col("z.rt.count").as("rt_count"))
         .orderBy(col("flag"), col("le"))
-    }),
+    }, Oracle(s"""WITH base AS (
+      |  SELECT l_returnflag AS flag, $LeCase AS le FROM lineitem),
+      |hist AS (SELECT flag, le, count(*) AS cnt FROM base GROUP BY 1, 2)
+      |SELECT flag, le, cnt AS delta_count,
+      |       CAST(sum(cnt) OVER (PARTITION BY flag ORDER BY le) AS BIGINT) AS cum_count,
+      |       cnt AS rt_count
+      |FROM hist ORDER BY flag, le""".stripMargin)),
 
     // A11 — exponential-histogram percentile at scale 0 over l_extendedprice;
     // bucket value = midpoint (2^i + 2^(i+1))/2.
-    "q_a11_exp_quantile" -> ((s, d) => {
+    Op("q_a11_exp_quantile", (s, d) => {
       Tables.lineitem(s, d)
         .select(col("l_returnflag").as("flag"), log2Floor(col("l_extendedprice")).as("idx"))
         .groupBy(col("flag"), col("idx"))
@@ -124,12 +155,31 @@ object HistoQueries {
           round(HistogramFunctions.exp_histogram_quantile(lit(0), lit(0L), col("pos"),
             lit(null).cast(EmptyExpBuckets), lit(90.0)), 6).as("p90"))
         .orderBy(col("flag"))
-    }),
+    }, Oracle("""WITH pr AS (
+      |  SELECT l_returnflag AS flag,
+      |         length(bin(CAST(floor(l_extendedprice) AS BIGINT))) - 1 AS idx
+      |  FROM lineitem),
+      |hist AS (SELECT flag, idx, count(*) AS cnt FROM pr GROUP BY 1, 2),
+      |c AS (SELECT flag, idx, cnt,
+      |             sum(cnt) OVER (PARTITION BY flag ORDER BY idx) AS cum,
+      |             sum(cnt) OVER (PARTITION BY flag) AS total
+      |      FROM hist),
+      |ps AS (SELECT unnest([50.0, 90.0]) AS p),
+      |sel AS (SELECT flag, p, idx,
+      |               row_number() OVER (PARTITION BY flag, p ORDER BY idx) AS rn
+      |        FROM c CROSS JOIN ps
+      |        WHERE cum >= total * (p / 100.0)),
+      |q AS (SELECT flag, p, (pow(2, idx) + pow(2, idx + 1)) / 2.0 AS v
+      |      FROM sel WHERE rn = 1)
+      |SELECT flag,
+      |       round(max(CASE WHEN p = 50 THEN v END), 6) AS p50,
+      |       round(max(CASE WHEN p = 90 THEN v END), 6) AS p90
+      |FROM q GROUP BY flag ORDER BY flag""".stripMargin)),
 
     // A12 — merge exponential histograms of DIFFERENT scales (linestatus 'O'
     // at scale 1, 'F' at scale 0) with the typed Aggregator: rescale to
     // min-scale (index/2, toward zero), sum per index, then quantile.
-    "q_a12_exp_merge" -> ((s, d) => {
+    Op("q_a12_exp_merge", (s, d) => {
       val idx = when(col("l_linestatus") === "O",
           (length(bin(floor(col("l_extendedprice") * col("l_extendedprice")).cast("long"))) - 1).cast("int"))
         .otherwise(log2Floor(col("l_extendedprice")))
@@ -157,7 +207,29 @@ object HistoQueries {
           round(HistogramFunctions.exp_histogram_quantile(col("m.scale"),
             col("m.zeroCount"), col("m.positive"), col("m.negative"), lit(90.0)), 6).as("p90"))
         .orderBy(col("flag"))
-    }),
+    }, Oracle("""WITH pr AS (
+      |  SELECT l_returnflag AS flag,
+      |         CASE WHEN l_linestatus = 'O'
+      |              THEN (length(bin(CAST(floor(l_extendedprice * l_extendedprice) AS BIGINT))) - 1) // 2
+      |              ELSE length(bin(CAST(floor(l_extendedprice) AS BIGINT))) - 1
+      |         END AS idx
+      |  FROM lineitem),
+      |hist AS (SELECT flag, idx, count(*) AS cnt FROM pr GROUP BY 1, 2),
+      |c AS (SELECT flag, idx, cnt,
+      |             sum(cnt) OVER (PARTITION BY flag ORDER BY idx) AS cum,
+      |             sum(cnt) OVER (PARTITION BY flag) AS total
+      |      FROM hist),
+      |ps AS (SELECT unnest([50.0, 90.0]) AS p),
+      |sel AS (SELECT flag, p, idx,
+      |               row_number() OVER (PARTITION BY flag, p ORDER BY idx) AS rn
+      |        FROM c CROSS JOIN ps
+      |        WHERE cum >= total * (p / 100.0)),
+      |q AS (SELECT flag, p, (pow(2, idx) + pow(2, idx + 1)) / 2.0 AS v
+      |      FROM sel WHERE rn = 1)
+      |SELECT flag, CAST(0 AS INTEGER) AS scale, CAST(0 AS BIGINT) AS zero_count,
+      |       round(max(CASE WHEN p = 50 THEN v END), 6) AS p50,
+      |       round(max(CASE WHEN p = 90 THEN v END), 6) AS p90
+      |FROM q GROUP BY flag ORDER BY flag""".stripMargin)),
 
     // A12+A11 negative walk — merge exp-histograms whose NEGATIVE side is
     // populated ('O' rows land in negative buckets by magnitude, 'F' in
@@ -165,7 +237,7 @@ object HistoQueries {
     // (percentile.go:186-191) as well as the positive one, end-to-end through
     // the Aggregator. Same scale both sides, so merge rescale is identity and
     // the oracle is closed-form.
-    "q_a12_exp_neg" -> ((s, d) => {
+    Op("q_a12_exp_neg", (s, d) => {
       val hists = Tables.lineitem(s, d)
         .select(col("l_returnflag").as("flag"), col("l_linestatus").as("ls"),
           log2Floor(col("l_extendedprice")).as("idx"))
@@ -191,13 +263,40 @@ object HistoQueries {
           round(HistogramFunctions.exp_histogram_quantile(col("m.scale"),
             col("m.zeroCount"), col("m.positive"), col("m.negative"), lit(90.0)), 6).as("p90"))
         .orderBy(col("flag"))
-    }),
+    }, Oracle("""WITH pr AS (
+      |  SELECT l_returnflag AS flag, l_linestatus = 'O' AS neg,
+      |         length(bin(CAST(floor(l_extendedprice) AS BIGINT))) - 1 AS idx
+      |  FROM lineitem),
+      |hist AS (SELECT flag, neg, idx, count(*) AS cnt FROM pr GROUP BY 1, 2, 3),
+      |c AS (SELECT flag, neg, idx, cnt,
+      |             sum(cnt) OVER (PARTITION BY flag
+      |               ORDER BY neg DESC, idx) AS cum,
+      |             sum(cnt) OVER (PARTITION BY flag) AS total
+      |      FROM hist),
+      |ps AS (SELECT unnest([25.0, 90.0]) AS p),
+      |sel AS (SELECT flag, p, neg, idx,
+      |               row_number() OVER (PARTITION BY flag, p
+      |                 ORDER BY neg DESC, idx) AS rn
+      |        FROM c CROSS JOIN ps
+      |        WHERE cum >= total * (p / 100.0)),
+      |q AS (SELECT flag, p,
+      |             (CASE WHEN neg THEN -1 ELSE 1 END) *
+      |               (pow(2, idx) + pow(2, idx + 1)) / 2.0 AS v
+      |      FROM sel WHERE rn = 1),
+      |nneg AS (SELECT flag, CAST(count(DISTINCT idx) AS BIGINT) AS n_neg_buckets
+      |         FROM pr WHERE neg GROUP BY flag)
+      |SELECT q.flag, CAST(0 AS INTEGER) AS scale,
+      |       coalesce(nneg.n_neg_buckets, 0) AS n_neg_buckets,
+      |       round(max(CASE WHEN p = 25 THEN v END), 6) AS p25,
+      |       round(max(CASE WHEN p = 90 THEN v END), 6) AS p90
+      |FROM q LEFT JOIN nneg ON nneg.flag = q.flag
+      |GROUP BY q.flag, nneg.n_neg_buckets ORDER BY q.flag""".stripMargin)),
 
     // A15 — quantiles over RAW values (reference test/validate_percentiles.go:
     // 99-114 `quantile(0.5)(value)`): Spark exact `percentile` ≡ DuckDB
     // quantile_cont. percentile_approx is the 100 TB scale path (mergeable
     // sketch); exactness pinned vs it in HistoQueriesSpec.
-    "q_a15_raw_quantile" -> ((s, d) => {
+    Op("q_a15_raw_quantile", (s, d) => {
       Tables.lineitem(s, d)
         .groupBy(col("l_returnflag").as("flag"))
         .agg(expr("percentile(l_quantity, array(0.5D, 0.95D, 0.99D))").as("qs"))
@@ -206,13 +305,17 @@ object HistoQueries {
           round(element_at(col("qs"), 2), 6).as("p95"),
           round(element_at(col("qs"), 3), 6).as("p99"))
         .orderBy(col("flag"))
-    }),
+    }, Oracle("""SELECT l_returnflag AS flag,
+      |       round(quantile_cont(l_quantity, 0.5), 6) AS p50,
+      |       round(quantile_cont(l_quantity, 0.95), 6) AS p95,
+      |       round(quantile_cont(l_quantity, 0.99), 6) AS p99
+      |FROM lineitem GROUP BY 1 ORDER BY flag""".stripMargin)),
 
     // J2 — bucket alignment by bound over time: per-flag monthly CUMULATIVE
     // histogram snapshots (carry-forward grid), deltaBuckets between
     // consecutive snapshots must recover each month's own histogram exactly —
     // including 0-count rows for bounds seen only in earlier months.
-    "q_j2_bucket_deltas" -> ((s, d) => {
+    Op("q_j2_bucket_deltas", (s, d) => {
       val base = Tables.lineitem(s, d).select(
         col("l_returnflag").as("flag"),
         date_format(col("l_shipdate"), "yyyy-MM").as("month"),
@@ -250,127 +353,7 @@ object HistoQueries {
         .select(col("flag"), col("month"), col("b.le").as("le"),
           col("b.count").as("delta_count"))
         .orderBy(col("flag"), col("month"), col("le"))
-    }))
-
-  def oracles: Map[String, String] = Map(
-    "q_a7_hist_quantile" -> s"""WITH base AS (
-      |  SELECT l_returnflag AS flag, $LeCase AS le FROM lineitem),
-      |hist AS (SELECT flag, le, count(*) AS cnt FROM base GROUP BY 1, 2),
-      |c AS (SELECT flag, le, cnt,
-      |             sum(cnt) OVER (PARTITION BY flag ORDER BY le) AS cum,
-      |             sum(cnt) OVER (PARTITION BY flag) AS total,
-      |             coalesce(lag(le) OVER (PARTITION BY flag ORDER BY le), 0.0) AS prev_le
-      |      FROM hist),
-      |ps AS (SELECT unnest([50.0, 95.0, 99.0]) AS p),
-      |sel AS (SELECT flag, p, le, cnt, cum, total, prev_le,
-      |               row_number() OVER (PARTITION BY flag, p ORDER BY le) AS rn
-      |        FROM c CROSS JOIN ps
-      |        WHERE cum >= total * (p / 100.0)),
-      |q AS (SELECT flag, p,
-      |             CASE WHEN cnt = 0 THEN le
-      |                  WHEN isinf(le) THEN prev_le
-      |                  ELSE prev_le + ((total * (p / 100.0) - (cum - cnt)) / cnt) * (le - prev_le)
-      |             END AS v
-      |      FROM sel WHERE rn = 1)
-      |SELECT flag,
-      |       round(max(CASE WHEN p = 50 THEN v END), 6) AS p50,
-      |       round(max(CASE WHEN p = 95 THEN v END), 6) AS p95,
-      |       round(max(CASE WHEN p = 99 THEN v END), 6) AS p99
-      |FROM q GROUP BY flag ORDER BY flag""".stripMargin,
-
-    "q_a9_bucket_merge" -> s"""SELECT l_returnflag AS flag, $LeCase AS le,
-      |       count(*) AS count
-      |FROM lineitem GROUP BY 1, 2 ORDER BY flag, le""".stripMargin,
-
-    "q_a10_roundtrip" -> s"""WITH base AS (
-      |  SELECT l_returnflag AS flag, $LeCase AS le FROM lineitem),
-      |hist AS (SELECT flag, le, count(*) AS cnt FROM base GROUP BY 1, 2)
-      |SELECT flag, le, cnt AS delta_count,
-      |       CAST(sum(cnt) OVER (PARTITION BY flag ORDER BY le) AS BIGINT) AS cum_count,
-      |       cnt AS rt_count
-      |FROM hist ORDER BY flag, le""".stripMargin,
-
-    "q_a11_exp_quantile" -> """WITH pr AS (
-      |  SELECT l_returnflag AS flag,
-      |         length(bin(CAST(floor(l_extendedprice) AS BIGINT))) - 1 AS idx
-      |  FROM lineitem),
-      |hist AS (SELECT flag, idx, count(*) AS cnt FROM pr GROUP BY 1, 2),
-      |c AS (SELECT flag, idx, cnt,
-      |             sum(cnt) OVER (PARTITION BY flag ORDER BY idx) AS cum,
-      |             sum(cnt) OVER (PARTITION BY flag) AS total
-      |      FROM hist),
-      |ps AS (SELECT unnest([50.0, 90.0]) AS p),
-      |sel AS (SELECT flag, p, idx,
-      |               row_number() OVER (PARTITION BY flag, p ORDER BY idx) AS rn
-      |        FROM c CROSS JOIN ps
-      |        WHERE cum >= total * (p / 100.0)),
-      |q AS (SELECT flag, p, (pow(2, idx) + pow(2, idx + 1)) / 2.0 AS v
-      |      FROM sel WHERE rn = 1)
-      |SELECT flag,
-      |       round(max(CASE WHEN p = 50 THEN v END), 6) AS p50,
-      |       round(max(CASE WHEN p = 90 THEN v END), 6) AS p90
-      |FROM q GROUP BY flag ORDER BY flag""".stripMargin,
-
-    "q_a12_exp_merge" -> """WITH pr AS (
-      |  SELECT l_returnflag AS flag,
-      |         CASE WHEN l_linestatus = 'O'
-      |              THEN (length(bin(CAST(floor(l_extendedprice * l_extendedprice) AS BIGINT))) - 1) // 2
-      |              ELSE length(bin(CAST(floor(l_extendedprice) AS BIGINT))) - 1
-      |         END AS idx
-      |  FROM lineitem),
-      |hist AS (SELECT flag, idx, count(*) AS cnt FROM pr GROUP BY 1, 2),
-      |c AS (SELECT flag, idx, cnt,
-      |             sum(cnt) OVER (PARTITION BY flag ORDER BY idx) AS cum,
-      |             sum(cnt) OVER (PARTITION BY flag) AS total
-      |      FROM hist),
-      |ps AS (SELECT unnest([50.0, 90.0]) AS p),
-      |sel AS (SELECT flag, p, idx,
-      |               row_number() OVER (PARTITION BY flag, p ORDER BY idx) AS rn
-      |        FROM c CROSS JOIN ps
-      |        WHERE cum >= total * (p / 100.0)),
-      |q AS (SELECT flag, p, (pow(2, idx) + pow(2, idx + 1)) / 2.0 AS v
-      |      FROM sel WHERE rn = 1)
-      |SELECT flag, CAST(0 AS INTEGER) AS scale, CAST(0 AS BIGINT) AS zero_count,
-      |       round(max(CASE WHEN p = 50 THEN v END), 6) AS p50,
-      |       round(max(CASE WHEN p = 90 THEN v END), 6) AS p90
-      |FROM q GROUP BY flag ORDER BY flag""".stripMargin,
-
-    "q_a12_exp_neg" -> """WITH pr AS (
-      |  SELECT l_returnflag AS flag, l_linestatus = 'O' AS neg,
-      |         length(bin(CAST(floor(l_extendedprice) AS BIGINT))) - 1 AS idx
-      |  FROM lineitem),
-      |hist AS (SELECT flag, neg, idx, count(*) AS cnt FROM pr GROUP BY 1, 2, 3),
-      |c AS (SELECT flag, neg, idx, cnt,
-      |             sum(cnt) OVER (PARTITION BY flag
-      |               ORDER BY neg DESC, idx) AS cum,
-      |             sum(cnt) OVER (PARTITION BY flag) AS total
-      |      FROM hist),
-      |ps AS (SELECT unnest([25.0, 90.0]) AS p),
-      |sel AS (SELECT flag, p, neg, idx,
-      |               row_number() OVER (PARTITION BY flag, p
-      |                 ORDER BY neg DESC, idx) AS rn
-      |        FROM c CROSS JOIN ps
-      |        WHERE cum >= total * (p / 100.0)),
-      |q AS (SELECT flag, p,
-      |             (CASE WHEN neg THEN -1 ELSE 1 END) *
-      |               (pow(2, idx) + pow(2, idx + 1)) / 2.0 AS v
-      |      FROM sel WHERE rn = 1),
-      |nneg AS (SELECT flag, CAST(count(DISTINCT idx) AS BIGINT) AS n_neg_buckets
-      |         FROM pr WHERE neg GROUP BY flag)
-      |SELECT q.flag, CAST(0 AS INTEGER) AS scale,
-      |       coalesce(nneg.n_neg_buckets, 0) AS n_neg_buckets,
-      |       round(max(CASE WHEN p = 25 THEN v END), 6) AS p25,
-      |       round(max(CASE WHEN p = 90 THEN v END), 6) AS p90
-      |FROM q LEFT JOIN nneg ON nneg.flag = q.flag
-      |GROUP BY q.flag, nneg.n_neg_buckets ORDER BY q.flag""".stripMargin,
-
-    "q_a15_raw_quantile" -> """SELECT l_returnflag AS flag,
-      |       round(quantile_cont(l_quantity, 0.5), 6) AS p50,
-      |       round(quantile_cont(l_quantity, 0.95), 6) AS p95,
-      |       round(quantile_cont(l_quantity, 0.99), 6) AS p99
-      |FROM lineitem GROUP BY 1 ORDER BY flag""".stripMargin,
-
-    "q_j2_bucket_deltas" -> s"""WITH base AS (
+    }, Oracle(s"""WITH base AS (
       |  SELECT l_returnflag AS flag, strftime(l_shipdate, '%Y-%m') AS month,
       |         $LeCase AS le
       |  FROM lineitem),
@@ -382,5 +365,5 @@ object HistoQueries {
       |SELECT g.flag, g.month, g.le, coalesce(c.c, 0) AS delta_count
       |FROM grid g LEFT JOIN cnt c
       |  ON c.flag = g.flag AND c.month = g.month AND c.le = g.le
-      |ORDER BY g.flag, g.month, g.le""".stripMargin)
+      |ORDER BY g.flag, g.month, g.le""".stripMargin)))
 }

@@ -64,14 +64,14 @@ object IngestQueries {
             .cast("map<string,string>").as("attributes")))
         .as("exemplars"))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def ops: Seq[Op] = Seq(
     // S3 — the per-type switch as one codegen projection; output flattened to
     // oracle-friendly scalars (bucket struct internals are covered by
     // n_buckets / bucket_total / +Inf-pad checks).
     // ordered via RangeSort.projectSorted: the wire fixture's exemplar
     // construction is the dominant per-row cost, and a plain orderBy would
     // execute it twice (range-boundary sampling + the real pass)
-    "q_s3_per_type" -> ((s, d) => graft.query.RangeSort.projectSorted(
+    Op("q_s3_per_type", (s, d) => graft.query.RangeSort.projectSorted(
       EventsMetrics.fromEvents(s, d), Seq(col("event_id"))) { base =>
       OtlpFlatten.convertDatapoints(wireFrom(base))
         .select(
@@ -88,7 +88,27 @@ object IngestQueries {
             Double.PositiveInfinity, lit(false)).as("last_le_is_inf"),
           coalesce(size(col("exemplars")), lit(-1)).as("n_exemplars"),
           Promread.labelsKey(col("attributes")).as("labels"))
-    }),
+    }, Oracle(s"""$WireCte
+      |SELECT event_id, kind,
+      |  CASE kind WHEN 'gauge' THEN 1 WHEN 'sum' THEN 2 WHEN 'histogram' THEN 3
+      |            WHEN 'exponential_histogram' THEN 5 ELSE 4 END AS metric_type,
+      |  CASE WHEN kind IN ('sum','histogram','exponential_histogram')
+      |       THEN temporality_code ELSE 0 END AS temporality,
+      |  CASE WHEN kind = 'sum' THEN is_monotonic ELSE false END AS is_monotonic,
+      |  CASE WHEN kind IN ('gauge','sum')
+      |       THEN round(coalesce(value_double, CAST(value_int AS DOUBLE)), 2)
+      |       END AS value,
+      |  CASE WHEN kind IN ('histogram','exponential_histogram','summary')
+      |       THEN cnt END AS count,
+      |  CASE WHEN kind IN ('histogram','exponential_histogram','summary')
+      |       THEN sm END AS sum,
+      |  CASE WHEN kind = 'histogram' THEN 4 ELSE -1 END AS n_buckets,
+      |  CASE WHEN kind = 'histogram' THEN bucket_total ELSE -1 END AS bucket_total,
+      |  kind = 'histogram' AS last_le_is_inf,
+      |  CASE WHEN kind <> 'summary' THEN n_ex ELSE -1 END AS n_exemplars,
+      |  'env=stage,svc=' || service_name || ',user=' || CAST(user_id AS VARCHAR)
+      |    AS labels
+      |FROM wire WHERE kind <> 'bogus' ORDER BY event_id""".stripMargin)),
 
     // S4 — exemplar cap: first-N kept when enabled, typed-null when disabled
     // (processor.go:100-104); the disabled branch keeps the full exemplar
@@ -100,7 +120,7 @@ object IngestQueries {
     // cap per consumer column re-ran the array-copying slice three times.
     // Now the shuffle sees only the scan, the capped array is materialized
     // once post-shuffle, and every check column reads from it.
-    "q_s4_exemplars" -> ((s, d) => graft.query.RangeSort.projectSorted(
+    Op("q_s4_exemplars", (s, d) => graft.query.RangeSort.projectSorted(
       EventsMetrics.fromEvents(s, d), Seq(col("event_id"))) { base =>
       wireFrom(base)
         .select(col("event_id"),
@@ -112,18 +132,26 @@ object IngestQueries {
           Validation.capExemplars(col("capped"), enabled = false).isNull
             .as("disabled_is_null"),
           element_at(col("capped"), 1).getField("spanId").as("first_span"))
-    }),
+    }, Oracle(s"""$WireCte
+      |SELECT event_id, CAST(least(n_ex, 10) AS INT) AS n_capped,
+      |       true AS disabled_is_null,
+      |       'span-1' AS first_span
+      |FROM wire ORDER BY event_id""".stripMargin)),
 
     // S5 — attribute merge, datapoint wins on key collision (otlp.go:332-344);
     // rendered through the sorted labels key so map ordering can't leak in.
-    "q_s5_attr_merge" -> ((s, d) => {
+    Op("q_s5_attr_merge", (s, d) => {
       wireFrom(EventsMetrics.fromEvents(s, d)).select(
         col("event_id"),
         Promread.labelsKey(
           OtlpFlatten.mergeAttributes(col("resource_attrs"), col("dp_attrs")))
           .as("merged"))
         .orderBy(col("event_id"))
-    }),
+    }, Oracle(s"""$WireCte
+      |SELECT event_id,
+      |       'env=stage,svc=' || service_name || ',user=' ||
+      |         CAST(user_id AS VARCHAR) AS merged
+      |FROM wire ORDER BY event_id""".stripMargin)),
 
     // Document-source round-trip: documents re-encoded line-per-row JSON
     // (to_json), re-ingested through DocumentSource.jsonl's explicit-schema
@@ -131,7 +159,7 @@ object IngestQueries {
     // table — a hash match proves the JSONL ingest path is lossless (any
     // mis-parsed or quarantined row would be absent from the clean side and
     // fail rows_match).
-    "q_src_jsonl" -> ((s, d) => {
+    Op("q_src_jsonl", (s, d) => {
       val dir = s"${System.getProperty("java.io.tmpdir")}/graft_src_jsonl"
       graft.model.Tables.documents(s, d)
         .select(to_json(struct(col("doc_id"), col("text"), col("lang"),
@@ -140,7 +168,9 @@ object IngestQueries {
       val (clean, _) = graft.sources.DocumentSource.quarantine(
         graft.sources.DocumentSource.jsonl(s, dir))
       clean.orderBy(col("doc_id"))
-    }),
+    }, Oracle(
+      """SELECT doc_id, text, lang, source, n_chars
+        |FROM documents ORDER BY doc_id""".stripMargin)),
 
     // WARC source (r16 verdict #8): every doc wrapped as a real
     // WARC/1.0 response record (HTTP message payload, byte-exact
@@ -152,7 +182,7 @@ object IngestQueries {
     // same byte-walk the file reader uses; the truncated plants must
     // quarantine, so a clean-side hash match against the raw documents
     // table proves extraction AND corruption isolation at once.
-    "q_src_warc" -> ((s, d) => {
+    Op("q_src_warc", (s, d) => {
       val docs = graft.model.Tables.documents(s, d)
       val http = concat(
         lit("HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n\r\n"),
@@ -182,7 +212,13 @@ object IngestQueries {
           length(col("body")).cast("long").as("n_chars"),
           col("body").as("text"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // the WARC round-trip's expected clean side: every document exactly
+      // once (truncated plants quarantine and contribute nothing)
+      Oracle(
+      """SELECT doc_id, 'response' AS warc_type, 200 AS http_status,
+        |       CAST(len(text) AS BIGINT) AS n_chars, text
+        |FROM documents ORDER BY doc_id""".stripMargin)),
 
     // First-mile HTTP response gate (r18): response records carry varied
     // status lines (200/404/301 by doc_id % 5) and Content-Type headers
@@ -192,7 +228,7 @@ object IngestQueries {
     // intersection. Same multi-record stream construction as q_src_warc,
     // so the gate is exercised THROUGH the real byte-walk, not on a
     // hand-built frame.
-    "q_warc_response_filter" -> ((s, d) => {
+    Op("q_warc_response_filter", (s, d) => {
       val docs = graft.model.Tables.documents(s, d)
       val status = element_at(array(lit("200 OK"), lit("404 Not Found"),
         lit("200 OK"), lit("301 Moved Permanently"), lit("200 OK")),
@@ -219,7 +255,18 @@ object IngestQueries {
         .select(substring_index(col("uri"), "/", -1).cast("long").as("doc_id"),
           col("media_type"), length(col("body")).cast("long").as("n_chars"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // the response gate's expected survivors: the status arm (200 ⇔
+      // doc_id % 5 ∈ {0,2,4}) ∩ the media arm (allowlisted ⇔ doc_id % 3 ∈
+      // {0,1}), media type normalized to lowercase-before-';'
+      Oracle(
+      """SELECT doc_id,
+        |       CASE WHEN doc_id % 3 = 0 THEN 'text/html'
+        |            ELSE 'text/plain' END AS media_type,
+        |       CAST(len(text) AS BIGINT) AS n_chars
+        |FROM documents
+        |WHERE doc_id % 5 IN (0, 2, 4) AND doc_id % 3 IN (0, 1)
+        |ORDER BY doc_id""".stripMargin)),
 
     // X-Robots-Tag opt-out gate (r18 verdict gap #2): the HEADER form of
     // the robots opt-out, OR-composed with the meta-tag gate — compliance
@@ -233,7 +280,7 @@ object IngestQueries {
     // — the old [^:]* bound missed it), kept when that same list is
     // scoped to another agent. The surfaced header value rides the output
     // verbatim, so the hash also pins the walk's header extraction.
-    "q_warc_robots_header" -> ((s, d) => {
+    Op("q_warc_robots_header", (s, d) => {
       val docs = graft.model.Tables.documents(s, d)
       val arm = pmod(col("doc_id"), lit(8))
       val xr = when(arm === 0, lit("noindex"))
@@ -271,7 +318,35 @@ object IngestQueries {
           (substring_index(col("uri"), "/", -1).cast("long") % 8).as("arm"),
           col("x_robots_tag"))
         .orderBy(col("doc_id"))
-    }))
+    },
+      // the robots-header gate re-runs the SHARED patterns (the
+      // q_html_robots_gate discipline) over the reconstructed header and
+      // body — survivors are the other-agent-scoped, token-less, and bare
+      // arms
+      Oracle {
+        val hp = graft.llm.Html.robotsHeaderPattern("robots").replace("'", "''")
+        val Seq(p1, p2) = graft.llm.Html.robotsPatterns("robots")
+          .map(_.replace("'", "''"))
+        s"""WITH h AS (SELECT doc_id, doc_id % 8 AS arm,
+           |  CASE doc_id % 8
+           |    WHEN 0 THEN 'noindex'
+           |    WHEN 1 THEN 'googlebot: noindex, nofollow'
+           |    WHEN 2 THEN 'robots: none'
+           |    WHEN 4 THEN 'nofollow'
+           |    WHEN 6 THEN 'unavailable_after: 25 Jun 2026, noindex'
+           |    WHEN 7 THEN 'googlebot: unavailable_after: 25 Jun 2026, noindex'
+           |    END AS x_robots_tag,
+           |  CASE WHEN doc_id % 8 = 3
+           |       THEN '<html><head><meta name="robots" content="noindex">' ||
+           |            '</head><body>' || text || '</body></html>'
+           |       ELSE text END AS body
+           |  FROM documents)
+           |SELECT doc_id, arm, x_robots_tag FROM h
+           |WHERE NOT coalesce(regexp_matches(x_robots_tag, '$hp'), false)
+           |  AND NOT (regexp_matches(body, '$p1')
+           |           OR regexp_matches(body, '$p2'))
+           |ORDER BY doc_id""".stripMargin
+      }))
 
   import OracleDefs.EvtCte
 
@@ -294,91 +369,4 @@ object IngestQueries {
       |  CAST(user_id % 3 + user_id % 5 + user_id % 7 + user_id % 11 AS BIGINT) AS bucket_total,
       |  CAST(user_id % 13 + 1 AS BIGINT) AS n_ex
       |  FROM evt)""".stripMargin
-
-  def oracles: Map[String, String] = Map(
-    "q_src_jsonl" ->
-      """SELECT doc_id, text, lang, source, n_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // the WARC round-trip's expected clean side: every document exactly
-    // once (truncated plants quarantine and contribute nothing)
-    "q_src_warc" ->
-      """SELECT doc_id, 'response' AS warc_type, 200 AS http_status,
-        |       CAST(len(text) AS BIGINT) AS n_chars, text
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // the response gate's expected survivors: the status arm (200 ⇔
-    // doc_id % 5 ∈ {0,2,4}) ∩ the media arm (allowlisted ⇔ doc_id % 3 ∈
-    // {0,1}), media type normalized to lowercase-before-';'
-    "q_warc_response_filter" ->
-      """SELECT doc_id,
-        |       CASE WHEN doc_id % 3 = 0 THEN 'text/html'
-        |            ELSE 'text/plain' END AS media_type,
-        |       CAST(len(text) AS BIGINT) AS n_chars
-        |FROM documents
-        |WHERE doc_id % 5 IN (0, 2, 4) AND doc_id % 3 IN (0, 1)
-        |ORDER BY doc_id""".stripMargin,
-
-    // the robots-header gate re-runs the SHARED patterns (the
-    // q_html_robots_gate discipline) over the reconstructed header and
-    // body — survivors are the other-agent-scoped, token-less, and bare
-    // arms
-    "q_warc_robots_header" -> {
-      val hp = graft.llm.Html.robotsHeaderPattern("robots").replace("'", "''")
-      val Seq(p1, p2) = graft.llm.Html.robotsPatterns("robots")
-        .map(_.replace("'", "''"))
-      s"""WITH h AS (SELECT doc_id, doc_id % 8 AS arm,
-         |  CASE doc_id % 8
-         |    WHEN 0 THEN 'noindex'
-         |    WHEN 1 THEN 'googlebot: noindex, nofollow'
-         |    WHEN 2 THEN 'robots: none'
-         |    WHEN 4 THEN 'nofollow'
-         |    WHEN 6 THEN 'unavailable_after: 25 Jun 2026, noindex'
-         |    WHEN 7 THEN 'googlebot: unavailable_after: 25 Jun 2026, noindex'
-         |    END AS x_robots_tag,
-         |  CASE WHEN doc_id % 8 = 3
-         |       THEN '<html><head><meta name="robots" content="noindex">' ||
-         |            '</head><body>' || text || '</body></html>'
-         |       ELSE text END AS body
-         |  FROM documents)
-         |SELECT doc_id, arm, x_robots_tag FROM h
-         |WHERE NOT coalesce(regexp_matches(x_robots_tag, '$hp'), false)
-         |  AND NOT (regexp_matches(body, '$p1')
-         |           OR regexp_matches(body, '$p2'))
-         |ORDER BY doc_id""".stripMargin
-    },
-
-    "q_s3_per_type" -> s"""$WireCte
-      |SELECT event_id, kind,
-      |  CASE kind WHEN 'gauge' THEN 1 WHEN 'sum' THEN 2 WHEN 'histogram' THEN 3
-      |            WHEN 'exponential_histogram' THEN 5 ELSE 4 END AS metric_type,
-      |  CASE WHEN kind IN ('sum','histogram','exponential_histogram')
-      |       THEN temporality_code ELSE 0 END AS temporality,
-      |  CASE WHEN kind = 'sum' THEN is_monotonic ELSE false END AS is_monotonic,
-      |  CASE WHEN kind IN ('gauge','sum')
-      |       THEN round(coalesce(value_double, CAST(value_int AS DOUBLE)), 2)
-      |       END AS value,
-      |  CASE WHEN kind IN ('histogram','exponential_histogram','summary')
-      |       THEN cnt END AS count,
-      |  CASE WHEN kind IN ('histogram','exponential_histogram','summary')
-      |       THEN sm END AS sum,
-      |  CASE WHEN kind = 'histogram' THEN 4 ELSE -1 END AS n_buckets,
-      |  CASE WHEN kind = 'histogram' THEN bucket_total ELSE -1 END AS bucket_total,
-      |  kind = 'histogram' AS last_le_is_inf,
-      |  CASE WHEN kind <> 'summary' THEN n_ex ELSE -1 END AS n_exemplars,
-      |  'env=stage,svc=' || service_name || ',user=' || CAST(user_id AS VARCHAR)
-      |    AS labels
-      |FROM wire WHERE kind <> 'bogus' ORDER BY event_id""".stripMargin,
-
-    "q_s4_exemplars" -> s"""$WireCte
-      |SELECT event_id, CAST(least(n_ex, 10) AS INT) AS n_capped,
-      |       true AS disabled_is_null,
-      |       'span-1' AS first_span
-      |FROM wire ORDER BY event_id""".stripMargin,
-
-    "q_s5_attr_merge" -> s"""$WireCte
-      |SELECT event_id,
-      |       'env=stage,svc=' || service_name || ',user=' ||
-      |         CAST(user_id AS VARCHAR) AS merged
-      |FROM wire ORDER BY event_id""".stripMargin)
 }

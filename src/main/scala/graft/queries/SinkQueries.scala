@@ -18,7 +18,7 @@ import graft.sink.{MetricsSink, RollupMaintenance}
   */
 object SinkQueries {
 
-  import OracleDefs.NowMs
+  import OracleDefs.{NowMs, EvtCte}
 
   private def m1(s: SparkSession, d: String): DataFrame =
     Rollup.rollup1m(EventsMetrics.fromEvents(s, d),
@@ -107,12 +107,12 @@ object SinkQueries {
     }
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def ops: Seq[Op] = Seq(
     // S6+O4+F4 — write the 1m tier (daily partitions, range-clustered on the
     // storage sort key), then serve a promread window from it: P8 picks the
     // tier, the partition filter prunes directories, the bucket predicate
     // lands on the parquet scan.
-    "q_sink_roundtrip" -> ((s, d) => {
+    Op("q_sink_roundtrip", (s, d) => {
       val base = scratch("q_sink_rt")
       MetricsSink.write(m1(s, d), base, MetricsSink.M1, col("bucket_ms"),
         Seq(col("workspace_id"), col("metric")), mode = "overwrite")
@@ -123,7 +123,14 @@ object SinkQueries {
         .filter(col("bucket_ms").between(RtStart, RtEnd))
         .select(rollupOut: _*)
         .orderBy(col("workspace_id"), col("metric"), col("bucket_ms"))
-    }),
+    }, Oracle(s"""$EvtCte,
+      |m1 AS ($m1Sql)
+      |SELECT workspace_id, metric, bucket_ms,
+      |       vmin AS value_min, vmax AS value_max,
+      |       ${OracleDefs.stableAvg4Sql("vavg")} AS value_avg, vlast AS value_last,
+      |       round(vsum, 2) AS value_sum, cnt AS samples_count
+      |FROM m1 WHERE bucket_ms BETWEEN $RtStart AND $RtEnd
+      |ORDER BY 1, 2, 3""".stripMargin)),
 
     // ST8 — raw tier → incremental FULL-width 1m/5m/1h cascade with the
     // reference's freshness windows, read back from the written 1h tier
@@ -132,7 +139,7 @@ object SinkQueries {
     // reach 1h, exactly like the MV chain. The scratch base is wiped first:
     // the cascade's dynamic-partition overwrite is idempotent against its OWN
     // schema but must not union against stale partitions of an older one.
-    "q_st8_cascade" -> ((s, d) => {
+    Op("q_st8_cascade", (s, d) => {
       val base = scratch("q_st8")
       wipe(s, base)
       val keys = Seq(col("workspace_id"), col("metric"))
@@ -144,7 +151,32 @@ object SinkQueries {
         .filter(col("bucket_ms") >= NowMs - RollupMaintenance.freshnessMs("metrics_1m"))
         .select(fullOut: _*)
         .orderBy(col("workspace_id"), col("metric"), col("bucket_ms"))
-    }),
+    }, Oracle(s"""$EvtCte,
+      |fresh AS (SELECT * FROM evt WHERE ts_ms >= ${NowMs - 86400000L}),
+      |m1 AS (SELECT workspace_id, metric, (ts_ms // 60000) * 60000 AS bucket_ms,
+      |       min(value) vmin, max(value) vmax, avg(value) vavg,
+      |       arg_max(value, event_id) vlast,
+      |       sum(user_id % 10 + 1) cntc, sum(round(value * 10, 2)) sumc,
+      |       4 * count(*) nbe,
+      |       sum(user_id % 3 + user_id % 5 + user_id % 7 + user_id % 11) bct,
+      |       count(*) cnt, max(event_id) lseq
+      |       FROM fresh GROUP BY 1,2,3),
+      |m5 AS (SELECT workspace_id, metric, (bucket_ms // 300000) * 300000 AS bucket_ms,
+      |       min(vmin) vmin, max(vmax) vmax, avg(vavg) vavg,
+      |       arg_max(vlast, lseq) vlast, sum(cntc) cntc, sum(sumc) sumc,
+      |       sum(nbe) nbe, sum(bct) bct, sum(cnt) cnt, max(lseq) lseq
+      |       FROM m1 GROUP BY 1,2,3)
+      |SELECT workspace_id, metric, (bucket_ms // 3600000) * 3600000 AS bucket_ms,
+      |       min(vmin) AS value_min, max(vmax) AS value_max,
+      |       ${OracleDefs.stableAvg4Sql("avg(vavg)")} AS value_avg,
+      |       arg_max(vlast, lseq) AS value_last,
+      |       CAST(sum(cntc) AS BIGINT) AS count,
+      |       round(sum(sumc), 2) AS sum,
+      |       CAST(sum(nbe) AS INT) AS n_bucket_entries,
+      |       CAST(sum(bct) AS BIGINT) AS bucket_count_total,
+      |       'm=' || metric AS attrs,
+      |       CAST(sum(cnt) AS BIGINT) AS samples_count
+      |FROM m5 GROUP BY 1,2,3 ORDER BY 1,2,3""".stripMargin)),
 
     // P8 as a PLAN rewrite — the MV-routing Catalyst rule (plans/
     // RollupRouting, SURVEY §4 v1) under the oracle gate: the registered
@@ -156,7 +188,7 @@ object SinkQueries {
     // hash match proves the rewrite is invisible in the result. The routed
     // rows are materialized while the confs are set and returned as a local
     // relation so the session-wide rule can never leak into later queries.
-    "q_p8_route_mv" -> ((s, d) => {
+    Op("q_p8_route_mv", (s, d) => {
       val base = scratch("q_p8_mv")
       wipe(s, base)
       val keys = Seq(col("workspace_id"), col("metric"))
@@ -196,7 +228,21 @@ object SinkQueries {
         s.conf.unset("spark.graft.rollup.freshAsOfMs")
         s.conf.unset("spark.graft.rollup.keys")
       }
-    }),
+    },
+      // The routed plan reads STORED tier columns (value_min/value_max/
+      // value_avg/samples_count); the oracle recomputes them from the events
+      // table — a hash match proves the Catalyst rewrite returned exactly the
+      // raw-derived answer. stableAvg4 on both sides: the stored value_avg and
+      // DuckDB's avg(value) differ only in float summation order.
+      Oracle(s"""$EvtCte
+      |SELECT workspace_id, metric,
+      |       (ts_ms // 60000) * 60000 AS bucket_ms,
+      |       min(value) AS value_min, max(value) AS value_max,
+      |       ${OracleDefs.stableAvg4Sql("avg(value)")} AS value_avg,
+      |       count(*) AS samples_count
+      |FROM evt
+      |WHERE ts_ms >= ${NowMs - OracleDefs.DayMs} AND ts_ms < $NowMs
+      |GROUP BY 1,2,3 ORDER BY 1,2,3""".stripMargin)),
 
     // The MV-routing rule on the reference's most characteristic read — a
     // histogram_quantile dashboard over raw (README.md:161-170) — via the
@@ -207,8 +253,16 @@ object SinkQueries {
     // DuckDB oracle recomputes count/sum/p50/p95 from the events table with
     // the reference's interpolation walk, so a hash match proves the routed
     // histogram answer equals the raw-derived one.
-    "q_p8_route_mv_hist" -> ((s, d) =>
-      routedHistDashboard(s, d, "q_p8_mv_hist", mergeTierBuckets = false)),
+    Op("q_p8_route_mv_hist", (s, d) =>
+      routedHistDashboard(s, d, "q_p8_mv_hist", mergeTierBuckets = false),
+      // The routed histogram dashboard: the plan reads the STORED 5m tier and
+      // merges its bucket concats; the oracle recomputes count/sum and the
+      // reference interpolation walk (percentile.go:17-67) from the events
+      // table per 5m bucket — a hash match proves the Catalyst rewrite of the
+      // histogram shape returned exactly the raw-derived answer. Groups whose
+      // four fixture bounds all sum to zero get NULL quantiles on both sides
+      // (the reference errors on total=0; the engine surfaces that as NULL).
+      Oracle(RoutedHistOracleSql)),
 
     // The SAME routed histogram dashboard over tiers built with
     // `maintenance.merge_tier_buckets=true` — the opt-in scale mode that
@@ -220,8 +274,14 @@ object SinkQueries {
     // parquet, the cascade, and the Catalyst rewrite. The builder also
     // asserts the stored vectors really are merged (no duplicate bounds
     // per row), so the query can't silently pass on concat storage.
-    "q_p8_route_mv_hist_merged" -> ((s, d) =>
-      routedHistDashboard(s, d, "q_p8_mv_hist_mrg", mergeTierBuckets = true)),
+    // Verify-only: same dashboard, same oracle — benching it would
+    // double-count the routed-hist setup without adding a distinct
+    // production path.
+    Op("q_p8_route_mv_hist_merged", (s, d) =>
+      routedHistDashboard(s, d, "q_p8_mv_hist_mrg", mergeTierBuckets = true),
+      // The merged-storage twin answers from bound-summed tier vectors but
+      // must produce the IDENTICAL raw-derived result — same oracle verbatim.
+      VerifyOnly(RoutedHistOracleSql)),
 
     // The read path's REAL histogram case at coarse resolution
     // (handler.go:304-321 routing + :179-205 histogram rows +
@@ -231,13 +291,19 @@ object SinkQueries {
     // p50/p90/p99 over the merged histogram. Exercises matchers against the
     // stored attribute map, partition pruning on the monthly tier, and the
     // quantile over buckets that went through parquet — end-to-end.
-    "q_read_path_5m_hist" -> ((s, d) => storedHistRead(s, d, "q_rp5m", HStart, HEnd)),
+    Op("q_read_path_5m_hist", (s, d) => storedHistRead(s, d, "q_rp5m", HStart, HEnd),
+      // The coarse-tier histogram reads: rows whose tier bucket falls in the
+      // window (bucket_ms BETWEEN start AND end — restated as the floor
+      // expression), merged per series into the four fixture bounds, then the
+      // reference percentile interpolation (percentile.go:17-67) in SQL.
+      Oracle(histReadSql(300000L, HEnd))),
 
     // Same read path routed to the 1h tier: a 10-day span fails the 5m gate
     // (span ≥ 7d, handler.go:304-321) regardless of age, so the quantile
     // merges the STORED hourly bucket concats — the coarsest storage a real
     // histogram query ever reads.
-    "q_read_path_1h_hist" -> ((s, d) => storedHistRead(s, d, "q_rp1h", HStart, GEnd)),
+    Op("q_read_path_1h_hist", (s, d) => storedHistRead(s, d, "q_rp1h", HStart, GEnd),
+      Oracle(histReadSql(3600000L, GEnd))),
 
     // The EXP-histogram read at the stored 1m tier — the ONLY tier carrying
     // exp columns (the reference's 5m/1h tables drop them,
@@ -246,7 +312,7 @@ object SinkQueries {
     // with the typed Aggregator, and walk negative→zero→positive for the
     // percentile (percentile.go:159-225). Closes the loop q_st8_cascade
     // leaves open: exp payloads surviving parquet and feeding a read.
-    "q_read_path_1m_exp" -> ((s, d) => {
+    Op("q_read_path_1m_exp", (s, d) => {
       import Promread._
       val base = scratch("q_rp1m_exp")
       wipe(s, base)
@@ -280,7 +346,36 @@ object SinkQueries {
             col("m.zeroCount"), col("m.positive"), col("m.negative"),
             lit(99.0)), 6).as("p99"))
         .orderBy(col("workspace_id"), col("metric"))
-    }))
+    },
+      // Closed-form restatement of the stored-1m exp read: the fixture's exp
+      // payload is one negative bucket (-1, u%6), zero count u%4, one positive
+      // bucket (1, u%5) at scale len(metric)%3, so the negative→zero→positive
+      // walk (percentile.go:159-210) collapses to a three-region CASE on the
+      // modular sums, with bucket midpoints from base = 2^(2^-scale).
+      Oracle(s"""$EvtCte,
+      |sel AS (SELECT * FROM evt
+      |        WHERE workspace_id = 'ws-1'
+      |          AND regexp_matches(metric, '^evt_(purchase|view)$$')
+      |          AND (ts_ms // 60000) * 60000 BETWEEN $RtStart AND $RtEnd),
+      |agg AS (SELECT workspace_id, metric,
+      |               CAST(length(metric) % 3 AS INT) AS s,
+      |               CAST(sum(user_id % 6) AS BIGINT) AS n,
+      |               CAST(sum(user_id % 4) AS BIGINT) AS z,
+      |               CAST(sum(user_id % 5) AS BIGINT) AS pc
+      |        FROM sel GROUP BY 1, 2),
+      |b AS (SELECT *, pow(2, pow(2, -CAST(s AS DOUBLE))) AS base,
+      |             CAST(n + z + pc AS DOUBLE) AS total FROM agg),
+      |v AS (SELECT workspace_id, metric, s, z, ps.p,
+      |             CASE WHEN n >= total * (ps.p / 100.0)
+      |                    THEN -((pow(base, -1) + 1.0) / 2.0)
+      |                  WHEN n + z >= total * (ps.p / 100.0) THEN 0.0
+      |                  ELSE (pow(base, 1) + pow(base, 2)) / 2.0 END AS val
+      |      FROM b CROSS JOIN (SELECT unnest([50.0, 99.0]) AS p) ps)
+      |SELECT workspace_id, metric, s AS scale, z AS zero_count,
+      |       round(CAST(s AS DOUBLE) * 0.5, 6) AS zero_threshold,
+      |       round(max(CASE WHEN p = 50 THEN val END), 6) AS p50,
+      |       round(max(CASE WHEN p = 99 THEN val END), 6) AS p99
+      |FROM v GROUP BY 1, 2, 3, 4, 5 ORDER BY 1, 2""".stripMargin)))
 
   /** The promread histogram case against STORED coarse tiers: build the full
     * cascade down to whatever tier P8 routes [startMs, endMs] to, write it as
@@ -392,116 +487,12 @@ object SinkQueries {
       |  AND q.metric = a.metric AND q.bucket_ms = a.bucket_ms
       |GROUP BY 1, 2, 3, 4, 5 ORDER BY 1, 2, 3""".stripMargin
 
-  import OracleDefs.EvtCte
-
   private val m1Sql =
     """SELECT workspace_id, metric, (ts_ms // 60000) * 60000 AS bucket_ms,
       |       min(value) vmin, max(value) vmax, avg(value) vavg,
       |       arg_max(value, event_id) vlast, sum(value) vsum, count(*) cnt,
       |       max(event_id) lseq
       |       FROM evt GROUP BY 1,2,3""".stripMargin
-
-  def oracles: Map[String, String] = Map(
-    "q_sink_roundtrip" -> s"""$EvtCte,
-      |m1 AS ($m1Sql)
-      |SELECT workspace_id, metric, bucket_ms,
-      |       vmin AS value_min, vmax AS value_max,
-      |       ${OracleDefs.stableAvg4Sql("vavg")} AS value_avg, vlast AS value_last,
-      |       round(vsum, 2) AS value_sum, cnt AS samples_count
-      |FROM m1 WHERE bucket_ms BETWEEN $RtStart AND $RtEnd
-      |ORDER BY 1, 2, 3""".stripMargin,
-
-    "q_st8_cascade" -> s"""$EvtCte,
-      |fresh AS (SELECT * FROM evt WHERE ts_ms >= ${NowMs - 86400000L}),
-      |m1 AS (SELECT workspace_id, metric, (ts_ms // 60000) * 60000 AS bucket_ms,
-      |       min(value) vmin, max(value) vmax, avg(value) vavg,
-      |       arg_max(value, event_id) vlast,
-      |       sum(user_id % 10 + 1) cntc, sum(round(value * 10, 2)) sumc,
-      |       4 * count(*) nbe,
-      |       sum(user_id % 3 + user_id % 5 + user_id % 7 + user_id % 11) bct,
-      |       count(*) cnt, max(event_id) lseq
-      |       FROM fresh GROUP BY 1,2,3),
-      |m5 AS (SELECT workspace_id, metric, (bucket_ms // 300000) * 300000 AS bucket_ms,
-      |       min(vmin) vmin, max(vmax) vmax, avg(vavg) vavg,
-      |       arg_max(vlast, lseq) vlast, sum(cntc) cntc, sum(sumc) sumc,
-      |       sum(nbe) nbe, sum(bct) bct, sum(cnt) cnt, max(lseq) lseq
-      |       FROM m1 GROUP BY 1,2,3)
-      |SELECT workspace_id, metric, (bucket_ms // 3600000) * 3600000 AS bucket_ms,
-      |       min(vmin) AS value_min, max(vmax) AS value_max,
-      |       ${OracleDefs.stableAvg4Sql("avg(vavg)")} AS value_avg,
-      |       arg_max(vlast, lseq) AS value_last,
-      |       CAST(sum(cntc) AS BIGINT) AS count,
-      |       round(sum(sumc), 2) AS sum,
-      |       CAST(sum(nbe) AS INT) AS n_bucket_entries,
-      |       CAST(sum(bct) AS BIGINT) AS bucket_count_total,
-      |       'm=' || metric AS attrs,
-      |       CAST(sum(cnt) AS BIGINT) AS samples_count
-      |FROM m5 GROUP BY 1,2,3 ORDER BY 1,2,3""".stripMargin,
-
-    // The routed plan reads STORED tier columns (value_min/value_max/
-    // value_avg/samples_count); the oracle recomputes them from the events
-    // table — a hash match proves the Catalyst rewrite returned exactly the
-    // raw-derived answer. stableAvg4 on both sides: the stored value_avg and
-    // DuckDB's avg(value) differ only in float summation order.
-    "q_p8_route_mv" -> s"""$EvtCte
-      |SELECT workspace_id, metric,
-      |       (ts_ms // 60000) * 60000 AS bucket_ms,
-      |       min(value) AS value_min, max(value) AS value_max,
-      |       ${OracleDefs.stableAvg4Sql("avg(value)")} AS value_avg,
-      |       count(*) AS samples_count
-      |FROM evt
-      |WHERE ts_ms >= ${NowMs - OracleDefs.DayMs} AND ts_ms < $NowMs
-      |GROUP BY 1,2,3 ORDER BY 1,2,3""".stripMargin,
-
-    // The routed histogram dashboard: the plan reads the STORED 5m tier and
-    // merges its bucket concats; the oracle recomputes count/sum and the
-    // reference interpolation walk (percentile.go:17-67) from the events
-    // table per 5m bucket — a hash match proves the Catalyst rewrite of the
-    // histogram shape returned exactly the raw-derived answer. Groups whose
-    // four fixture bounds all sum to zero get NULL quantiles on both sides
-    // (the reference errors on total=0; the engine surfaces that as NULL).
-    "q_p8_route_mv_hist" -> RoutedHistOracleSql,
-
-    // The merged-storage twin answers from bound-summed tier vectors but
-    // must produce the IDENTICAL raw-derived result — same oracle verbatim.
-    "q_p8_route_mv_hist_merged" -> RoutedHistOracleSql,
-
-    // The coarse-tier histogram reads: rows whose tier bucket falls in the
-    // window (bucket_ms BETWEEN start AND end — restated as the floor
-    // expression), merged per series into the four fixture bounds, then the
-    // reference percentile interpolation (percentile.go:17-67) in SQL.
-    "q_read_path_5m_hist" -> histReadSql(300000L, HEnd),
-    "q_read_path_1h_hist" -> histReadSql(3600000L, GEnd),
-
-    // Closed-form restatement of the stored-1m exp read: the fixture's exp
-    // payload is one negative bucket (-1, u%6), zero count u%4, one positive
-    // bucket (1, u%5) at scale len(metric)%3, so the negative→zero→positive
-    // walk (percentile.go:159-210) collapses to a three-region CASE on the
-    // modular sums, with bucket midpoints from base = 2^(2^-scale).
-    "q_read_path_1m_exp" -> s"""$EvtCte,
-      |sel AS (SELECT * FROM evt
-      |        WHERE workspace_id = 'ws-1'
-      |          AND regexp_matches(metric, '^evt_(purchase|view)$$')
-      |          AND (ts_ms // 60000) * 60000 BETWEEN $RtStart AND $RtEnd),
-      |agg AS (SELECT workspace_id, metric,
-      |               CAST(length(metric) % 3 AS INT) AS s,
-      |               CAST(sum(user_id % 6) AS BIGINT) AS n,
-      |               CAST(sum(user_id % 4) AS BIGINT) AS z,
-      |               CAST(sum(user_id % 5) AS BIGINT) AS pc
-      |        FROM sel GROUP BY 1, 2),
-      |b AS (SELECT *, pow(2, pow(2, -CAST(s AS DOUBLE))) AS base,
-      |             CAST(n + z + pc AS DOUBLE) AS total FROM agg),
-      |v AS (SELECT workspace_id, metric, s, z, ps.p,
-      |             CASE WHEN n >= total * (ps.p / 100.0)
-      |                    THEN -((pow(base, -1) + 1.0) / 2.0)
-      |                  WHEN n + z >= total * (ps.p / 100.0) THEN 0.0
-      |                  ELSE (pow(base, 1) + pow(base, 2)) / 2.0 END AS val
-      |      FROM b CROSS JOIN (SELECT unnest([50.0, 99.0]) AS p) ps)
-      |SELECT workspace_id, metric, s AS scale, z AS zero_count,
-      |       round(CAST(s AS DOUBLE) * 0.5, 6) AS zero_threshold,
-      |       round(max(CASE WHEN p = 50 THEN val END), 6) AS p50,
-      |       round(max(CASE WHEN p = 99 THEN val END), 6) AS p99
-      |FROM v GROUP BY 1, 2, 3, 4, 5 ORDER BY 1, 2""".stripMargin)
 
   private def histReadSql(grainMs: Long, endMs: Long): String = s"""$EvtCte,
       |sel AS (SELECT * FROM evt

@@ -10,10 +10,12 @@ import graft.model.Schemas
 /** S1 — the streaming ingest source (reference: internal/receiver/otlp.go
   * :30-124, a gRPC OTLP endpoint).
   *
-  * Spark-first: the transport is not re-implemented — a 1000-executor
-  * cluster ingests from a landing zone (files dropped by collectors) or a
-  * message bus, not from one gRPC socket. The source here is a file stream
-  * over OTLP-export-shaped rows: one row per resource with its attributes
+  * Spark-first: the transports ([[graft.transport.GrpcOtlpReceiver]] for
+  * gRPC, `/ingest` for OTLP/HTTP) only land each export as a file, and the
+  * stream reads that landing zone — so a 1000-executor cluster can as well
+  * ingest files dropped by collectors, or a message bus, never one socket.
+  * The source here is a file stream over OTLP-export-shaped rows: one row
+  * per resource with its attributes
   * and an array of datapoint structs — the exact shape
   * `ExportMetricsServiceRequest` flattens to (otlp.go:91-124). Swapping in a
   * Kafka source is a one-line change because everything downstream takes the

@@ -296,28 +296,11 @@ class GrpcOtlpReceiver(spark: SparkSession, sourceDir: String,
     }
   }
 
-  /** Same atomic landing protocol as RemoteReadServer.handleIngest: write the
-    * batch as one parquet file, dot-prefixed while in flight (the stream
-    * source's listing skips dot files), revealed by same-dir ATOMIC_MOVE. */
-  private def land(rows: Seq[OtlpProto.ResourceRow]): Unit = {
-    val n = uploads.incrementAndGet()
-    val dir = new java.io.File(sourceDir)
-    dir.mkdirs()
-    val scratch = java.nio.file.Files.createTempDirectory("otlp_grpc")
-    try {
-      OtlpProto.toDataFrame(spark, rows)
-        .coalesce(1).write.mode("overwrite").parquet(scratch.toString)
-      val part = scratch.toFile.listFiles
-        .filter(_.getName.endsWith(".parquet")).head
-      val tmp = java.io.File.createTempFile(s".grpc_${n}_", ".tmp", dir)
-      java.nio.file.Files.copy(part.toPath, tmp.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      val dst = new java.io.File(dir, s"grpc_${System.nanoTime()}_$n.parquet")
-      java.nio.file.Files.move(tmp.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      ()
-    } finally RemoteReadServer.deleteRecursively(scratch.toFile)
-  }
+  /** Land the batch as one parquet file in the watched source dir, by the
+    * same protocol as `/ingest` ([[Landing.land]]). */
+  private def land(rows: Seq[OtlpProto.ResourceRow]): Unit =
+    Landing.land(sourceDir, "grpc", uploads.incrementAndGet(),
+      Right(OtlpProto.toDataFrame(spark, rows)))
 
   /** gRPC message framing: 1-byte compressed flag + 4-byte big-endian length
     * + payload, repeated. A unary call carries exactly one message; with a

@@ -4,7 +4,7 @@ import java.net.InetSocketAddress
 import java.util.concurrent.atomic.AtomicLong
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.xerial.snappy.Snappy
 
@@ -21,17 +21,15 @@ import graft.sink.MetricsSink
   *     out. The wire format is [[PromProto]]; the query semantics are the
   *     SAME `Promread` functions the oracle-checked read-path queries run —
   *     the transport adds codec and routing glue, never new semantics.
-  *   - `POST /ingest` — the landing-zone analog of the reference's OTLP gRPC
-  *     receiver (internal/receiver/otlp.go:30-124). Two bodies accepted: a
-  *     parquet file of export-shaped rows ([[graft.streaming.OtlpSource
-  *     .exportSchema]]), or — with a JSON content type — a real collector's
-  *     OTLP/HTTP+JSON `ExportMetricsServiceRequest`, decoded through
+  *   - `POST /ingest` — the HTTP twin of the reference's OTLP receiver
+  *     (internal/receiver/otlp.go:30-124), beside the gRPC one
+  *     ([[GrpcOtlpReceiver]]). Two bodies accepted: a parquet file of
+  *     export-shaped rows ([[graft.streaming.OtlpSource.exportSchema]]),
+  *     or — with a JSON content type — a real collector's OTLP/HTTP+JSON
+  *     `ExportMetricsServiceRequest`, decoded through
   *     [[graft.ingest.OtlpJson]] first. Either way the batch lands
-  *     atomically in the watched source dir and the app's file stream picks
-  *     it up as a micro-batch. gRPC itself stays out of scope (no grpc
-  *     runtime ships here, and SURVEY §2.1 S1 scopes S1 to "transport, not
-  *     query semantics") — these are the transport stand-ins with the same
-  *     at-least-once hand-off.
+  *     atomically in the watched source dir ([[Landing.land]]) and the
+  *     app's file stream picks it up as a micro-batch.
   *
   * Serving model: the response materializes on the driver (the reference
   * handler does the same — it builds the full ReadResponse in memory,
@@ -159,35 +157,16 @@ class RemoteReadServer(spark: SparkSession, storageDir: String,
 
   private def handleIngest(body: Array[Byte], contentType: String): (Int, Array[Byte], Map[String, String]) = {
     val n = uploads.incrementAndGet()
-    val dir = new java.io.File(sourceDir)
-    dir.mkdirs()
     // parquet body: the batch is already export-shaped. JSON body: a real
     // collector's OTLP/HTTP+JSON export — decode it to the export frame
     // first, then land the parquet the file stream expects.
-    val parquetBytes =
-      if (contentType.toLowerCase.contains("json")) {
-        val out = java.nio.file.Files.createTempDirectory("otlp_json")
-        try {
-          graft.ingest.OtlpJson.decode(
-            spark.createDataset(Seq(new String(body, "UTF-8")))(
-              org.apache.spark.sql.Encoders.STRING).toDF("value"))
-            .coalesce(1).write.mode("overwrite").parquet(out.toString)
-          val part = out.toFile.listFiles
-            .filter(_.getName.endsWith(".parquet")).head
-          java.nio.file.Files.readAllBytes(part.toPath)
-        } finally RemoteReadServer.deleteRecursively(out.toFile)
-      } else body
-    // land atomically: a half-written file must never be visible to the
-    // file-stream source. The source's listing filters only dot/underscore-
-    // prefixed names, so the in-flight temp file MUST be dot-prefixed — a
-    // visible temp picked up mid-write (then renamed away) would poison the
-    // stream's offset log. ATOMIC_MOVE within the same directory then
-    // reveals the completed file in one step.
-    val tmp = java.io.File.createTempFile(s".upload_${n}_", ".tmp", dir)
-    java.nio.file.Files.write(tmp.toPath, parquetBytes)
-    val dst = new java.io.File(dir, s"upload_${System.nanoTime()}_$n.parquet")
-    java.nio.file.Files.move(tmp.toPath, dst.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    val batch =
+      if (contentType.toLowerCase.contains("json"))
+        Right(graft.ingest.OtlpJson.decode(
+          spark.createDataset(Seq(new String(body, "UTF-8")))(
+            org.apache.spark.sql.Encoders.STRING).toDF("value")))
+      else Left(body)
+    val dst = Landing.land(sourceDir, "upload", n, batch)
     (200, dst.getName.getBytes("UTF-8"), Map.empty)
   }
 
@@ -197,11 +176,54 @@ class RemoteReadServer(spark: SparkSession, storageDir: String,
     * the timestamp — the stored-tier read battery's contract
     * (handler.go:179-205 sample arms; 304-321 routing). */
   def query(q: PromProto.Query, limit: Int = 100000): Seq[PromProto.TimeSeries] = {
+    val shaped = collectReplanning(plan(q, limit))
+    // regroup consecutive rows into series (A14's grouping, sample arrays
+    // preserved in the shaped order)
+    val bySeries = scala.collection.mutable.LinkedHashMap
+      .empty[(String, String), (Seq[(String, String)],
+        scala.collection.mutable.ArrayBuffer[(Double, Long)])]
+    shaped.foreach { r =>
+      val key = (r.getString(0), r.getString(1))
+      val entry = bySeries.getOrElseUpdate(key, {
+        val attrs = r.getMap[String, String](2).toSeq.sortBy(_._1)
+        ((("__name__", r.getString(0)) +: attrs),
+          scala.collection.mutable.ArrayBuffer.empty[(Double, Long)])
+      })
+      entry._2 += ((r.getDouble(4), r.getLong(3)))
+    }
+    bySeries.values.map { case (labels, samples) =>
+      PromProto.TimeSeries(labels, samples.toSeq)
+    }.toSeq
+  }
+
+  /** Collect a read, re-planning once if a file it listed has vanished. A
+    * compaction or tier-refresh swap replaces a partition's files between
+    * a read's listing and its scan; the rows are still there, in the swapped-
+    * in files, so one fresh plan (a fresh listing) answers in full. Skipping
+    * missing files instead would silently drop those rows. `planned` is
+    * evaluated per attempt; a deadline cancel is never retried. */
+  private[transport] def collectReplanning(planned: => Option[DataFrame]): Array[Row] = {
+    def attempt() = planned.fold(Array.empty[Row])(collectWithDeadline)
+    try attempt()
+    catch {
+      case e: Exception if !e.isInstanceOf[RemoteReadServer.QueryTimeout] &&
+          RemoteReadServer.missingFile(e) => attempt()
+    }
+  }
+
+  /** The shaped read of `q` (metric, labels, attributes, ts_ms,
+    * sample_value), or None while its routed tier does not exist yet —
+    * before the first write, where the reference's pre-created table
+    * answers with no series. The check is a filesystem call, not a job. */
+  private[transport] def plan(q: PromProto.Query, limit: Int): Option[DataFrame] = {
     import Promread._
     // per-request clock, like the reference handler: a frozen launch-time
     // now would age every routing decision on a long-running server
     val tierName = selectTable(q.startMs, q.endMs, nowMs())
     val tier = MetricsSink.tiers.find(_.name == tierName).get
+    val tierDir = new org.apache.hadoop.fs.Path(s"$storageDir/${tier.name}")
+    if (!tierDir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(tierDir))
+      return None
     val (vCol, tsCol) =
       if (tier == MetricsSink.Raw) (col("value"), col("ts_ms"))
       else (col("value_last"), col("bucket_ms"))
@@ -241,27 +263,9 @@ class RemoteReadServer(spark: SparkSession, storageDir: String,
             .otherwise(sampleValue(vCol, col("count"), col("sum"))))
       }
     val rows = sampled.filter(col("sample_value").isNotNull)
-    val shapedDf = shape(rows, tsCol, Seq(col("labels")), limit)
+    Some(shape(rows, tsCol, Seq(col("labels")), limit)
       .select(col("metric"), col("labels"), col("attributes"),
-        tsCol.as("ts_ms"), col("sample_value"))
-    val shaped = collectWithDeadline(shapedDf)
-    // regroup consecutive rows into series (A14's grouping, sample arrays
-    // preserved in the shaped order)
-    val bySeries = scala.collection.mutable.LinkedHashMap
-      .empty[(String, String), (Seq[(String, String)],
-        scala.collection.mutable.ArrayBuffer[(Double, Long)])]
-    shaped.foreach { r =>
-      val key = (r.getString(0), r.getString(1))
-      val entry = bySeries.getOrElseUpdate(key, {
-        val attrs = r.getMap[String, String](2).toSeq.sortBy(_._1)
-        ((("__name__", r.getString(0)) +: attrs),
-          scala.collection.mutable.ArrayBuffer.empty[(Double, Long)])
-      })
-      entry._2 += ((r.getDouble(4), r.getLong(3)))
-    }
-    bySeries.values.map { case (labels, samples) =>
-      PromProto.TimeSeries(labels, samples.toSeq)
-    }.toSeq
+        tsCol.as("ts_ms"), col("sample_value")))
   }
 
   /** The server-side execution time budget — the analog of the reference's
@@ -274,8 +278,7 @@ class RemoteReadServer(spark: SparkSession, storageDir: String,
     * the collect — surfaced as [[RemoteReadServer.QueryTimeout]] → 503. The
     * cancellation is group-scoped, so concurrent requests on the shared
     * session are untouched (pinned by RemoteReadServerSpec). */
-  private def collectWithDeadline(df: org.apache.spark.sql.DataFrame):
-      Array[org.apache.spark.sql.Row] = {
+  private def collectWithDeadline(df: DataFrame): Array[Row] = {
     if (queryTimeoutMs <= 0) return df.collect()
     val sc = spark.sparkContext
     val groupId = s"promread-${java.util.UUID.randomUUID()}"
@@ -323,6 +326,11 @@ object RemoteReadServer {
   private[transport] final class QueryTimeout(ms: Long)
     extends RuntimeException(s"query exceeded the ${ms}ms execution budget")
 
+  /** Whether a file missing at read time is in `e`'s cause chain. */
+  private[transport] def missingFile(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(32)
+      .exists(_.isInstanceOf[java.io.FileNotFoundException])
+
   /** Shared deadline timer for [[RemoteReadServer]] instances — one daemon
     * thread; the scheduled task is a cheap cancelJobGroup call. */
   private[transport] lazy val watchdog:
@@ -332,9 +340,4 @@ object RemoteReadServer {
       t.setDaemon(true)
       t
     })
-
-  private[transport] def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(deleteRecursively))
-    f.delete()
-  }
 }

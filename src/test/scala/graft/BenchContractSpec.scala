@@ -2,16 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the driver-facing output/registration contracts that round 10 proved
-  * can break silently:
-  *
-  *   - the driver parses ONLY the final stdout line of Bench, captured from a
-  *     ~2000-char tail window — if the line is longer than the window, the
-  *     window starts mid-line and the driver reads half a JSON object
-  *     (BENCH_r10 "parsed": null);
-  *   - the driver's correctness gate runs exactly the oracleSql keys — an
-  *     oracle entry without a query builder silently contributes nothing, and
-  *     a verifyOnly name that drifts from the registry silently un-skips.
+/** Pins the driver-facing output contract that round 10 proved can break
+  * silently: the driver parses ONLY the final stdout line of Bench, captured
+  * from a ~2000-char tail window — if the line is longer than the window,
+  * the window starts mid-line and the driver reads half a JSON object
+  * (BENCH_r10 "parsed": null). The registration contract lives in
+  * [[graft.queries.OpRegistrySpec]].
   */
 class BenchContractSpec extends AnyFunSuite {
 
@@ -66,42 +62,5 @@ class BenchContractSpec extends AnyFunSuite {
     assert(line.startsWith("""{"metric":"total","value":1.00"""))
     assert(line.contains(""""q_y":"ERR""""))
     assert(line.contains(""""failed":1"""))
-  }
-
-  test("every oracle key has a query builder") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracleSql keys without builders: $missing")
-  }
-
-  test("every verifyOnly name is a registered query") {
-    val stale = SparkEntry.verifyOnly -- SparkEntry.queries.keySet
-    assert(stale.isEmpty, s"verifyOnly names not in queries: $stale")
-  }
-
-  test("every non-verifyOnly query has an oracle or is a documented rows-only twin") {
-    // rows-only-by-design: production LSH/sketch paths whose banding DuckDB
-    // cannot restate — each has a _det/_all full-oracle twin in verifyOnly
-    // q_ann_ivf_kmeans: learned-quantizer IVF — float-mean assignment ties
-    // are engine-dependent; objective monotonicity pinned in LlmSpec
-    // q_ann_lsh_mp: multi-probe variant of q_ann_lsh — same float-sign
-    // sensitivity; recall ⊇ single-probe pinned in LlmSpec, and the
-    // family's full-oracle twin (q_ann_lsh_all) covers the shared plumbing
-    // q_quality_cut(_by_lang): production approx_percentile thresholds — a
-    // GK sketch DuckDB cannot restate; the exact-percentile twins
-    // q_quality_cut(_by_lang)_det carry the full-oracle hash and
-    // LlmQueriesSpec pins ±5% agreement
-    // q_dedup_clusters_lsh / q_dedup_apply_lsh: production MinHash-LSH dedup
-    // chain — xxhash64 signatures DuckDB cannot restate; their full-oracle
-    // twins q_dedup_clusters_lsh_det / q_dedup_apply_lsh_det (deterministic
-    // shingle-id signatures) hash-match, and LlmSpec pins LSH-chain recall
-    // against the exact-Jaccard chain
-    val rowsOnly = Set("q_dedup_minhash", "q_dedup_simhash", "q_ann_lsh",
-      "q_ann_lsh_mp", "q_ann_ivf", "q_ann_ivf_kmeans", "q_quality_cut",
-      "q_quality_cut_by_lang", "q_lm_cut_by_lang",
-      "q_dedup_clusters_lsh", "q_dedup_apply_lsh")
-    val unproven = SparkEntry.queries.keySet --
-      SparkEntry.oracleSql.keySet -- rowsOnly
-    assert(unproven.isEmpty,
-      s"queries with neither an oracle nor a rows-only justification: $unproven")
   }
 }

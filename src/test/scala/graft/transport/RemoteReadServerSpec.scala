@@ -165,6 +165,53 @@ class RemoteReadServerSpec extends SparkSpec {
     }
   }
 
+  test("remote read before the first write answers 200 with no series") {
+    // no tier directory exists yet: the reference's pre-created table
+    // answers an empty result, not an error
+    val empty = Files.createTempDirectory("graft_transport_empty").toString
+    val src = Files.createTempDirectory("graft_transport_src").toString
+    val srv = new RemoteReadServer(spark, empty, src, "ws-1", () => NowA)
+    val port = srv.start()
+    try {
+      val any = Seq(PromProto.LabelMatcher(2, "__name__", "^evt_.*$"))
+      // one raw-routed (start=end=0) and one 1m-routed query
+      val req = PromProto.encodeReadRequest(Seq(PromProto.Query(0L, 0L, any),
+        PromProto.Query(NowA - 20 * 3600 * 1000L, NowA, any)))
+      val (code, body) = post(port, "/api/v1/read", Snappy.compress(req))
+      assert(code === 200, new String(body, "UTF-8"))
+      assert(PromProto.decodeReadResponse(Snappy.uncompress(body)) ===
+        Seq(Seq.empty, Seq.empty))
+    } finally srv.stop()
+  }
+
+  test("a read racing a compaction swap re-plans once and returns every row") {
+    val b = Files.createTempDirectory("graft_transport_swap").toString
+    MetricsSink.write(EventsMetrics.withHistogram(EventsMetrics.fromEvents(spark, Sf)),
+      b, MetricsSink.Raw, col("ts_ms"), keys, mode = "overwrite")
+    val src = Files.createTempDirectory("graft_transport_src").toString
+    val srv = new RemoteReadServer(spark, b, src, "ws-1", () => NowA)
+    val q = PromProto.Query(0L, 0L,
+      Seq(PromProto.LabelMatcher(2, "__name__", "^evt_.*$")))
+    def rows(r: Iterable[org.apache.spark.sql.Row]) = r.map(_.toString).toSeq.sorted
+    val expected = rows(srv.plan(q, 100000).get.collect())
+    assert(expected.nonEmpty)
+    // plan (and so list the files), then swap every partition's files out
+    val stale = srv.plan(q, 100000)
+    assert(MetricsSink.compactPartitions(spark, b, MetricsSink.Raw, keys,
+      col("ts_ms"), maxFiles = 0).nonEmpty)
+    // the stale plan on its own fails on a part file the swap removed
+    val e = intercept[Exception](stale.get.collect())
+    assert(RemoteReadServer.missingFile(e), e.toString)
+    // the read retries once on a fresh plan and loses no row
+    var plans = 0
+    val got = srv.collectReplanning {
+      plans += 1
+      if (plans == 1) stale else srv.plan(q, 100000)
+    }
+    assert(plans === 2)
+    assert(rows(got) === expected)
+  }
+
   test("loopback remote read: aged window routes to the stored 1m tier") {
     val src = Files.createTempDirectory("graft_transport_src").toString
     withServer(src) { (srv, port) =>
@@ -415,7 +462,7 @@ class RemoteReadServerSpec extends SparkSpec {
     val src = Files.createTempDirectory("graft_transport_src").toString
     val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
     def otlpTempDirs(): Set[String] = tmpRoot.listFiles.toSeq
-      .filter(f => f.isDirectory && f.getName.startsWith("otlp_json"))
+      .filter(f => f.isDirectory && f.getName.startsWith("otlp_land"))
       .map(_.getName).toSet
     val before = otlpTempDirs()
     withServer(src) { (_, port) =>
